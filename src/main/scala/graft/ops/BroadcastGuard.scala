@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 
 /** Shared sizing guard for the measured-size broadcast pattern the
   * iterative graph/dedup loops use (opt guide §3.1): a loop-built
@@ -11,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * `autoBroadcastJoinThreshold` — past it the shuffled plan is kept
   * byte-for-byte, so cluster-scale posture is unchanged.
   *
-  * Centralized (r17 ADVICE): the threshold parse and the sizing
+  * Centralized (r17 ADVICE): the threshold read and the sizing
   * arithmetic were copy-pasted across 14 sites with drifting constants,
   * and every site parsed the conf with `.toLong` — Spark accepts
   * byte-size strings ("10MB", "10m") for this conf, which would have
@@ -27,26 +28,17 @@ private[graft] object BroadcastGuard {
     * longs — the modularity/label shapes. */
   val RowBytesLabeled = 96L
 
-  /** The session broadcast threshold in bytes. Accepts both the raw
-    * numeric form the repo's entry points set and Spark's unit-suffixed
-    * byte strings; a disabled threshold (-1/0) or an unparseable value
-    * falls back to never-broadcast / the 10 MB default respectively. */
-  def thresholdBytes(spark: SparkSession): Long = {
-    val raw = spark.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString)
-      .trim
-    // JavaUtils rejects a leading sign, but Spark's own conf parser
-    // (ConfigHelpers.byteFromString) strips it first — "-1" must keep
-    // meaning "broadcast disabled", exactly like the planner reads it
-    val (body, sign) =
-      if (raw.startsWith("-")) (raw.substring(1), -1L) else (raw, 1L)
-    try sign * org.apache.spark.network.util.JavaUtils.byteStringAsBytes(body)
-    catch { case _: IllegalArgumentException | _: NumberFormatException =>
-      10L << 20 }
-  }
+  /** The session broadcast threshold in bytes, as the planner reads
+    * it: Spark's typed conf value, so unit-suffixed strings ("10MB")
+    * parse and -1 keeps meaning "broadcast disabled". A malformed
+    * value never gets here — the session refuses it at `conf.set`. */
+  def thresholdBytes(spark: SparkSession): Long =
+    castToImpl(spark).sessionState.conf.autoBroadcastJoinThreshold
 
   /** True when `rows` rows at `rowBytes` each fit the session broadcast
-    * threshold (strict <, matching the planner's own comparison). */
+    * threshold. Strict <, one byte stricter than the planner's own
+    * `canBroadcastBySize` (<=): the estimate here is a guess, so a tie
+    * keeps the shuffled plan. */
   def fits(spark: SparkSession, rows: Long, rowBytes: Long): Boolean =
     rows * rowBytes < thresholdBytes(spark)
 }

@@ -825,35 +825,27 @@ object Corpus {
     * cut list of a Lee-style substring-dedup pass at char granularity,
     * with NO hashes and NO window strings anywhere.
     *
-    * Algorithm: prefix-doubling (Manber–Myers) over (doc, pos) —
-    * the first ⌈log₂ minLen⌉ rounds of distributed suffix-array
-    * construction, stopped at EXACTLY length `minLen`:
+    * Algorithm: exact window classes from packed character blocks,
+    * prefix doubling (Manber–Myers) only past what the key holds:
     *
-    *   1. rank₁ = dense rank of the character (bounded vocabulary,
-    *      broadcast);
-    *   2. while k < minLen with s = min(k, minLen − k):
-    *      rank_{k+s}(p) = dense-rank of (rank_k(p), rank_k(p+s)) —
-    *      the two length-k blocks overlap when s < k, and equality of
-    *      both ⇔ equality of the (k+s)-block, so the final round
-    *      lands on exact minLen classes (the sparse-table overlap
-    *      idiom); positions past doc end carry the −1 sentinel, which
-    *      can never equal a real rank;
-    *   3. positions with a full window whose class has ≥ 2 members
-    *      are duplicated; gaps-and-islands per doc merges them.
+    *   1. the corpus alphabet (D chars) is collected and broadcast;
+    *      codes 1..D take b = ⌈log₂(D + 1)⌉ bits, c = ⌊63 / b⌋ per long;
+    *   2. one UDF pass per doc packs the first k₀ = min(minLen, 4·c)
+    *      chars of every position's window into ≤ 4 longs (exact key);
+    *   3. class id r = min position id over a key — one shuffle;
+    *   4. while k < minLen with s = min(k, minLen − k): the class of
+    *      (r_k(p), r_k(p+s)) by the same step — overlapping blocks land
+    *      on exactly minLen (the sparse-table idiom), and the inner
+    *      (doc, p+s) join drops windows running past the doc end;
+    *   5. classes with ≥ 2 members are duplicated; gaps-and-islands
+    *      per doc merges their positions.
     *
-    * The dense rank is DISTRIBUTED: range-partition the distinct
-    * (r1, r2) pairs, row_number within each partition, add broadcast
-    * per-partition offsets — the [[FrameOps.searchSortedLarge]]
-    * pattern, including its localCheckpoint partition-pinning fix
-    * (the pid feeds two plan branches). No global window ever sees
-    * more rows than the partition count.
-    *
-    * 100 TB posture: per round one equi-join on (doc, p+s), one
-    * distinct over pairs, one range-repartition + local sort, one
-    * join back — all shuffle-bound, ⌈log₂ minLen⌉ ≈ 6 rounds at the
-    * Lee et al. L = 50. State per position is two longs; the
-    * character corpus never re-materializes window strings (the
-    * ~L× byte amplification [[dedupSpansRewrite]] documents is gone —
+    * 100 TB posture: one alphabet census, one map-side pack, one key
+    * shuffle; a doubling round (one (doc, p+s) equi-join + one class
+    * shuffle) runs only while k < minLen — none for the Lee et al.
+    * L = 50 at D ≤ 15, one at D ≤ 31; none for q321's L = 30 at D ≤ 31.
+    * State is ≤ 32 B per position and no window string is ever built
+    * (the ~L× amplification [[dedupSpansRewrite]] documents is gone —
     * this IS its named 100 TB swap, made exact instead of hashed).
     *
     * @return (id, span_start, span_end, span_len, n_windows) per
@@ -888,7 +880,7 @@ object Corpus {
     * (id, n_chars, n_removed, text_dedup), n_removed = 0 rows pass
     * through verbatim (over the NORMALIZED text, like the spans op).
     *
-    * Scale shape: [[suffixRankPositions]]'s ⌈log₂ L⌉ rank rounds, then
+    * Scale shape: [[suffixRankPositions]]'s packed-key class step, then
     * ONE bounded class aggregate (cnt + min position), co-partitioned
     * (id, p) joins for cover/excise, and a per-doc rebuild — the same
     * final joins as [[dedupSpansRewrite]] minus its ~L× window-string
@@ -937,7 +929,7 @@ object Corpus {
     * are reported too (boilerplate inside one doc). Top `topK` edges
     * by (n_windows DESC, src_id, dst_id).
     *
-    * Same scale shape as the spans op: the ⌈log₂ L⌉ rank rounds, one
+    * Same scale shape as the spans op: the packed-key class step, one
     * bounded per-class aggregate, one co-partitioned join back —
     * edges are ≤ positions, and topK bounds the result.
     */
@@ -960,15 +952,15 @@ object Corpus {
   }
 
   /** Shared kernel of [[suffixRankSpans]] / [[suffixRankRewrite]] /
-    * [[dupAttribution]]: exact rank classes of every full
-    * `minLen`-char window, by prefix-doubling — returns (id, p, r)
-    * for positions with a full window (see suffixRankSpans' scaladoc
-    * for the algorithm and the distributed dense-rank construction).
+    * [[dupAttribution]]: exact classes of every full `minLen`-char
+    * window, from packed character keys plus prefix doubling past
+    * them — returns (id, p, r) for positions with a full window, r an
+    * opaque class id (see suffixRankSpans' scaladoc for the algorithm).
     *
     * MEMOIZED via [[SuffixRankMemo]] (r16 verdict item 1): the three
     * public consumers run over the same (input, minLen) back-to-back
-    * in any bench/verify pass, and the ⌈log₂ minLen⌉ shuffle rounds
-    * dominate their cost — the memo keys on the ANALYZED plan of the
+    * in any bench/verify pass, and the kernel's shuffles dominate
+    * their cost — the memo keys on the ANALYZED plan of the
     * projected (id, text) input (`sameResult`, so fresh reads of the
     * same parquet path hit and a different path/filter/minLen misses)
     * and holds the final checkpointed frame. See the memo's scaladoc
@@ -990,62 +982,67 @@ object Corpus {
   def suffixMemoStats: (Long, Double) =
     (SuffixRankMemo.computeCount, SuffixRankMemo.computeSeconds)
 
+  /** (bits per code, chars per long, k₀) of the packed key for an
+    * alphabet of `d` chars: ≤ 4 longs = 32 B, what one doubling round
+    * shuffles per position (see [[suffixRankSpans]]). */
+  private[graft] def suffixKeyShape(d: Int, minLen: Int): (Int, Int, Int) = {
+    val bits = math.max(1, 32 - Integer.numberOfLeadingZeros(d))
+    (bits, 63 / bits, math.min(minLen, 4 * (63 / bits)))
+  }
+
   private def suffixRankPositionsCompute(df: DataFrame, id: String,
       text: String, minLen: Int): DataFrame = {
     require(minLen >= 2 && minLen <= 4096,
       s"minLen must be in [2, 4096], got $minLen")
     val norm = Dedup.normText(col(text))
-    val chars = df.select(col(id),
-        posexplode(split(norm, "")).as(Seq("p0", "ch")))
-      .filter(length(col("ch")) > 0)
-      .select(col(id), (col("p0") + 1).cast("long").as("p"), col("ch"))
-    val charRanks = chars.select(col("ch")).distinct()
-      .withColumn("r",
-        row_number().over(Window.orderBy(col("ch"))).cast("long"))
-    var ranks = chars.join(broadcast(charRanks), Seq("ch"))
-      .select(col(id), col("p"), col("r"))
-      .localCheckpoint(true)
-    var k = 1
+    val docs = df.filter(col(id).isNotNull)
+    val alphabet = docs
+      .select(explode(array_distinct(TextAnalysis.codePoints(norm))))
+      .distinct().collect().map(_.getInt(0)).sorted
+    val (bits, perLong, k0) = suffixKeyShape(alphabet.length, minLen)
+    val bc = df.sparkSession.sparkContext.broadcast(alphabet)
+    // one pass per doc: (p, packed k₀-char block) per full block
+    val keysUdf = udf { (s: String) =>
+      val codes = Option(s).fold(Array.empty[Int])(_.codePoints.toArray)
+        .map(cp => java.util.Arrays.binarySearch(bc.value, cp) + 1L)
+      (0 to codes.length - k0).map { i =>
+        val key = new Array[Long](4)
+        for (j <- 0 until k0)
+          key(j / perLong) = (key(j / perLong) << bits) | codes(i + j)
+        ((i + 1).toLong, key(0), key(1), key(2), key(3))
+      }
+    }
+    // class id = min position id over the key; consumers use r only as a key
+    def classIds(f: DataFrame, key: Seq[Column]): DataFrame =
+      f.select(col(id), col("p"), col("__gid"),
+        min(col("__gid")).over(Window.partitionBy(key: _*)).as("r"))
+    val keyed = docs.select(col(id), explode(keysUdf(norm)).as("k"))
+      .select(col(id), col("k._1").as("p"),
+        monotonically_increasing_id().as("__gid"), col("k"))
+    var ranks = classIds(keyed,
+      (2 to (k0 + perLong - 1) / perLong + 1).map(i => col(s"k._$i")))
+    // doubling past k₀: class_{k+s}(p) = class of (r_k(p), r_k(p+s));
+    // the inner join drops blocks that would run past the doc end
+    var k = k0
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     while (k < minLen) {
       val shift = math.min(k, minLen - k)
-      val right = ranks.select(col(id).as("__rid"),
+      val cur = ranks.localCheckpoint(true)
+      rounds += cur
+      val right = cur.select(col(id).as("__rid"),
         (col("p") - shift).as("__rp"), col("r").as("__r2"))
-      val paired = ranks.join(right,
-          col(id) === col("__rid") && col("p") === col("__rp"), "left")
-        .select(col(id), col("p"), col("r").as("r1"),
-          coalesce(col("__r2"), lit(-1L)).as("r2"))
-      val pairs = paired.select(col("r1"), col("r2")).distinct()
-      val parted = pairs.repartitionByRange(col("r1"), col("r2"))
-        .withColumn("__pid", spark_partition_id())
-        .localCheckpoint()
-      val localW = Window.partitionBy(col("__pid"))
-        .orderBy(col("r1"), col("r2"))
-      val offsets = parted.groupBy(col("__pid"))
-        .agg(count(lit(1)).as("__cnt"))
-        .withColumn("__off", coalesce(sum(col("__cnt")).over(
-          Window.orderBy(col("__pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("__pid"), col("__off"))
-      val ranked = parted
-        .withColumn("__lr", row_number().over(localW).cast("long"))
-        .join(broadcast(offsets), "__pid")
-        .select(col("r1"), col("r2"), (col("__lr") + col("__off")).as("r"))
-      val next = paired.join(ranked, Seq("r1", "r2"))
-        .select(col(id), col("p"), col("r"))
+      ranks = classIds(
+        cur.join(right, col(id) === col("__rid") && col("p") === col("__rp")),
+        Seq(col("r"), col("__r2")))
       k += shift
-      // the LAST round's frame feeds exactly one consumer (the lens
-      // join below, itself eagerly pinned) — checkpointing it too
-      // would materialize the same row count twice (r16 verdict #1)
-      ranks = if (k < minLen) next.localCheckpoint(true) else next
     }
-    val lens = df.select(col(id), length(norm).cast("long").as("__len"))
-    // eager pin of the RETURNED frame: every consumer reads it at
-    // least twice (class census + join-back), and the memo hands the
-    // same frame to all three public ops — one materialization total
-    ranks.join(lens, Seq(id))
-      .filter(col("p") + minLen - 1 <= col("__len"))
-      .select(col(id), col("p"), col("r"))
-      .localCheckpoint(true)
+    // eager pin of the RETURNED frame, read twice by every consumer and
+    // shared by all three via the memo; round pins and the broadcast die
+    val out = ranks.select(col(id), col("p"), col("r")).localCheckpoint(true)
+    rounds.flatMap(SuffixRankMemo.checkpointRdd)
+      .foreach(_.unpersist(blocking = false))
+    bc.destroy()
+    out
   }
 
   /** Exact substring dedup with REWRITE (Lee et al. 2022, "Deduplicating
@@ -2476,7 +2473,7 @@ private[graft] object SuffixRankMemo {
   private def live(e: Entry): Boolean =
     e.rdd.exists(_.getStorageLevel != StorageLevel.NONE)
 
-  private def checkpointRdd(frame: DataFrame)
+  private[ops] def checkpointRdd(frame: DataFrame)
       : Option[org.apache.spark.rdd.RDD[_]] =
     frame.queryExecution.analyzed match {
       case l: LogicalRDD => Some(l.rdd)

@@ -41,9 +41,12 @@ class BroadcastGuardSpec extends SparkSpec {
     }
   }
 
-  test("an unparseable value falls back to the 10 MB default") {
-    withThreshold("not-a-size") {
-      assert(BroadcastGuard.thresholdBytes(spark) === (10L << 20))
+  test("a malformed value is refused at set and the threshold is kept") {
+    withThreshold((1L << 20).toString) {
+      intercept[IllegalArgumentException] {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "not-a-size")
+      }
+      assert(BroadcastGuard.thresholdBytes(spark) === (1L << 20))
     }
   }
 }

@@ -630,25 +630,118 @@ class PropertySpec extends SparkSpec {
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
           .toSet
-        // brute force: global census of l-char windows, islands merge
-        val norm = docs.map(_.toLowerCase.trim.replaceAll("\\s+", " "))
-        val wins = norm.zipWithIndex.flatMap { case (s, d) =>
-          (1 to s.length - l + 1).map(i =>
-            (d.toLong, i, s.substring(i - 1, i - 1 + l))) }
-        val dupW = wins.groupBy(_._3).filter(_._2.size >= 2).keySet
-        val want = norm.zipWithIndex.flatMap { case (s, d) =>
-          val ps = (1 to math.max(s.length - l + 1, 0))
-            .filter(i => dupW.contains(s.substring(i - 1, i - 1 + l)))
-          ps.foldLeft(List.empty[List[Int]]) {
-            case (acc, p) if acc.nonEmpty && acc.head.head == p - 1 =>
-              (p :: acc.head) :: acc.tail
-            case (acc, p) => List(p) :: acc
-          }.map(r => (d.toLong, r.last.toLong, (r.head + l - 1).toLong))
-        }.toSet
-        got == want
+        got == bruteSpans(docs, l)
       }
     }
     check("suffix-spans-vs-bruteforce", prop, minTests = 12)
+  }
+
+  /** Brute force spans: global census of l-char windows over the
+    * normalized texts, islands of duplicated positions merged per doc
+    * into (doc, span_start, span_end). */
+  private def bruteSpans(docs: List[String], l: Int)
+      : Set[(Long, Long, Long)] = {
+    val norm = docs.map(_.toLowerCase.trim.replaceAll("\\s+", " "))
+    val wins = norm.zipWithIndex.flatMap { case (s, d) =>
+      (1 to s.length - l + 1).map(i =>
+        (d.toLong, i, s.substring(i - 1, i - 1 + l))) }
+    val dupW = wins.groupBy(_._3).filter(_._2.size >= 2).keySet
+    norm.zipWithIndex.flatMap { case (s, d) =>
+      val ps = (1 to math.max(s.length - l + 1, 0))
+        .filter(i => dupW.contains(s.substring(i - 1, i - 1 + l)))
+      ps.foldLeft(List.empty[List[Int]]) {
+        case (acc, p) if acc.nonEmpty && acc.head.head == p - 1 =>
+          (p :: acc.head) :: acc.tail
+        case (acc, p) => List(p) :: acc
+      }.map(r => (d.toLong, r.last.toLong, (r.head + l - 1).toLong))
+    }.toSet
+  }
+
+  /** Brute force attribution edges: each non-first member of a
+    * duplicated l-char window class adds one window to the
+    * (src = min-(id, p) doc, dst = member doc) edge. */
+  private def bruteEdges(docs: List[String], l: Int)
+      : Map[(Long, Long), Long] =
+    bruteWindowCensus(docs, l).values
+      .filter(_.size >= 2)
+      .flatMap { occ =>
+        val src = occ.min._1
+        occ.filterNot(_ == occ.min).map(m => (src, m._1))
+      }.groupBy(identity).view.mapValues(_.size.toLong).toMap
+
+  // ---- suffix kernel across packed-code widths and doubling rounds ----
+  // The kernel packs the first k₀ chars of each window into longs at
+  // ⌈log₂(D + 1)⌉ bits per char and prefix-doubles only past k₀. The
+  // tiny-alphabet cases above never double; these corpora span the
+  // width boundaries (D = 3/4 and 31/32 straddle 2→3 and 5→6 bits, 300
+  // needs 9) and pick minLen for 0, 1 and 2 doubling rounds. Letters
+  // are CJK ideographs: BMP, non-ASCII and unchanged by normText.
+
+  /** Docs concatenated from a small pool of shared segments plus fresh
+    * ones, so windows of length ~l repeat across and within docs; the
+    * whole alphabet rides once (pinning D) and one doc stops one char
+    * short of a window. */
+  private def genPlantedCorpus(alpha: IndexedSeq[Char], l: Int)
+      : Gen[List[String]] = {
+    val seg = Gen.choose(math.max(1, l / 2), l + l / 4)
+      .flatMap(n => Gen.listOfN(n, Gen.oneOf(alpha)).map(_.mkString))
+    for {
+      pool <- Gen.listOfN(3, seg)
+      docs <- Gen.listOfN(4, Gen.choose(1, 4).flatMap(k =>
+        Gen.listOfN(k, Gen.frequency(3 -> Gen.oneOf(pool), 1 -> seg))
+          .map(_.mkString)))
+    } yield alpha.mkString :: docs.head.take(l - 1) :: docs
+  }
+
+  test("suffix kernel matches brute force across code widths and doubling rounds") {
+    for (d <- Seq(3, 4, 31, 32, 300); rounds <- 0 to 2) {
+      val alpha = (0 until d).map(i => (0x4E00 + i).toChar)
+      val w = graft.ops.Corpus.suffixKeyShape(d, 4096)._3
+      val genL = rounds match {
+        case 0 => Gen.choose(2, w)
+        case 1 => Gen.choose(w + 1, 2 * w)
+        case _ => Gen.choose(2 * w + 1, 4 * w)
+      }
+      val gen = genL.flatMap(l => genPlantedCorpus(alpha, l).map(l -> _))
+      // no shrinking: every shrink step is another Spark job, and the
+      // label plus the unshrunk corpus already localise a failure
+      val prop = Prop.forAllNoShrink(gen) { case (l, docs) =>
+        val df = docs.zipWithIndex
+          .map { case (s, i) => (i.toLong, s) }.toDF("doc_id", "text")
+          .repartition(3)
+        // both consumers read one memoized kernel build: spans pin the
+        // duplicated positions, edges pin the class partition itself;
+        // the build leaves no pinned RDD but the memo's own
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val spans = graft.ops.Corpus
+          .suffixRankSpans(df, "doc_id", "text", minLen = l)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .toSet
+        val edges = graft.ops.Corpus
+          .dupAttribution(df, "doc_id", "text", minLen = l, topK = 100000)
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet --
+          before -- graft.ops.SuffixRankMemo.pinnedRddIds
+        spans == bruteSpans(docs, l) && edges == bruteEdges(docs, l) &&
+          leaked.isEmpty
+      }
+      check(s"suffix-kernel-d$d-rounds$rounds", prop, minTests = 2)
+    }
+  }
+
+  test("suffix kernel on an empty frame and on docs with no full window") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(graft.ops.Corpus
+      .suffixRankSpans(empty, "doc_id", "text", minLen = 30).count() == 0)
+    val short = Seq((1L, "abcabc"), (2L, "abcabc"), (3L, null: String))
+      .toDF("doc_id", "text")
+    assert(graft.ops.Corpus
+      .suffixRankSpans(short, "doc_id", "text", minLen = 7).count() == 0)
+    assert(graft.ops.Corpus
+      .suffixRankSpans(short, "doc_id", "text", minLen = 6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSet == Set((1L, 1L, 6L), (2L, 1L, 6L)))
   }
 
   // ---- suffix-rank rewrite + attribution vs brute force (r16 verdict
@@ -720,16 +813,8 @@ class PropertySpec extends SparkSpec {
           .dupAttribution(df, "doc_id", "text", minLen = l, topK = 1000)
           .collect()
           .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-        // brute: each non-first member contributes one window to the
-        // (src=min-(id,p) doc, dst=member doc) edge — self-edges
-        // (within-doc repeats) included
-        val want = bruteWindowCensus(docs, l).values
-          .filter(_.size >= 2)
-          .flatMap { occ =>
-            val src = occ.min._1
-            occ.filterNot(_ == occ.min).map(m => (src, m._1))
-          }.groupBy(identity).view.mapValues(_.size.toLong).toMap
-        got == want
+        // self-edges (within-doc repeats) included
+        got == bruteEdges(docs, l)
       }
     }
     check("dup-attribution-vs-bruteforce", prop, minTests = 8)
