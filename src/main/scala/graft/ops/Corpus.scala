@@ -2473,7 +2473,7 @@ private[graft] object SuffixRankMemo {
   private def live(e: Entry): Boolean =
     e.rdd.exists(_.getStorageLevel != StorageLevel.NONE)
 
-  private[ops] def checkpointRdd(frame: DataFrame)
+  private[graft] def checkpointRdd(frame: DataFrame)
       : Option[org.apache.spark.rdd.RDD[_]] =
     frame.queryExecution.analyzed match {
       case l: LogicalRDD => Some(l.rdd)

@@ -1661,30 +1661,39 @@ object Graph {
     * Determinism contract, end to end:
     *   - pivots = the K smallest (knuthMix(node), node) pairs — no
     *     RNG, replayable in SQL ([[knuthMixSql]]);
-    *   - forward pass: simultaneous BFS from all pivots with exact
-    *     integer path counts σ (per round: one frontier×edges
-    *     equi-join, one anti-join against the visited set, one
-    *     (pivot, node)-keyed partial-aggregated sum);
+    *   - forward pass: BFS from every pivot with exact integer path
+    *     counts σ (overflow throws, as the ANSI BIGINT sum does);
     *   - backward pass: δ_micro(p,v) = Σ over shortest-path-DAG edges
     *     (v,w) of floor(σ_v · (10⁶ + δ_micro(p,w)) / σ_w) — each term
-    *     floors INDEPENDENTLY (the product through DECIMAL(38,0), so
-    *     σ near the int64 edge cannot wrap) and the terms sum as
-    *     BIGINT: association-order-free, bit-identical across
-    *     engines and partitionings. DAG edges are recovered
-    *     level-to-level (dist(w) = dist(v)+1 in an unweighted graph),
-    *     so no parent pointers are ever materialized.
+    *     floors INDEPENDENTLY (the product in 128-bit range, so σ near
+    *     the int64 edge cannot wrap) and the terms sum as BIGINT:
+    *     association-order-free, bit-identical across engines and
+    *     partitionings. DAG edges are recovered level-to-level
+    *     (dist(w) = dist(v)+1 in an unweighted graph), so no parent
+    *     pointers are ever materialized.
     *   - bc_micro(v) = Σ_pivots δ_micro(p, v); running with
     *     pivots = ALL nodes on an undirected graph yields exactly
     *     2 × 10⁶ × the textbook betweenness (each unordered pair seen
     *     from both endpoints).
     *
-    * 100 TB posture: per round (forward and backward) the edge list
-    * is touched by ONE equi-join keyed on the node, frontier rows
-    * carry three longs, and every round is pinned with an eager
-    * localCheckpoint (the kCorePeel lineage-blowup lesson). State is
-    * O(K · |ball|) rows — K bounds the multiplier, exactly the knob
-    * the Brandes–Pich estimator exposes. Nothing is collected to the
-    * driver but per-round counts.
+    * 100 TB posture: two paths with one output, picked by the measured
+    * edge count against the session broadcast threshold
+    * ([[BroadcastGuard]], the guard every iterative loop here uses).
+    *   - While |E| fits, the pivots are the queries and the graph is
+    *     the index: the distinct edge list is collected once into a
+    *     CSR adjacency and broadcast, and each task runs a plain
+    *     Brandes pass per pivot over it, resetting only the entries
+    *     that pivot touched (O(|ball|) per pivot, not O(|V|)). The
+    *     whole forward/backward pass is one stage instead of a
+    *     checkpointed join loop per level.
+    *   - Past the threshold the shuffled level loop runs: per round
+    *     (forward and backward) the edge list is touched by ONE
+    *     equi-join keyed on the node, frontier rows carry three longs,
+    *     and every round is pinned with an eager localCheckpoint (the
+    *     kCorePeel lineage-blowup lesson). State is O(K · |ball|) rows
+    *     — K bounds the multiplier, exactly the knob the Brandes–Pich
+    *     estimator exposes; nothing is collected but per-round counts.
+    * Both paths feed the same per-node sum/count and node left join.
     *
     * @return (node, bc_micro, n_piv) — n_piv = pivots whose truncated
     *         BFS assigned the node a dependency row (0 ≤ n_piv ≤ K);
@@ -1707,17 +1716,152 @@ object Graph {
     val piv = nodes.withColumn("hk", expr(knuthMixExpr("node")))
       .orderBy(col("hk"), col("node")).limit(k)
       .select(col("node").as("p"))
-      .localCheckpoint(true)
-    // r18 REVERT of the r17 edge-list broadcast (r17 VERDICT item 1 +
-    // ADVICE): broadcasting |E| re-ships and re-builds the broadcast
-    // relation on EVERY per-round action — one forward and one backward
-    // join per depth across all k pivots — and the r17 stable-box
-    // remeasure read the broadcast variant as a regression (iso 4.07 s
-    // vs prev 2.30 s). The edge list is persisted, so the shuffled
-    // sort-merge plan re-reads cached blocks and its shuffle files are
-    // reused across rounds; the pair frames dominate the exchanges
-    // either way. Keep the shuffled plan.
-    val eJ = e
+    val out =
+      if (BroadcastGuard.fits(edges.sparkSession, e.count(),
+          BroadcastGuard.RowBytesNarrow))
+        betweennessByPivot(e, nodes, piv, maxDepth)
+      else betweennessShuffled(e, nodes, piv.localCheckpoint(true), maxDepth)
+    e.unpersist(blocking = false)
+    nodes.unpersist(blocking = false)
+    out
+  }
+
+  /** Out-adjacency in CSR form: `ids` are the sorted distinct node ids,
+    * and the out-neighbours of ids(i) are `nbr(off(i) until off(i+1))`,
+    * given as indices into `ids`. */
+  private final case class Csr(ids: Array[Long], off: Array[Int],
+      nbr: Array[Int])
+
+  private object Csr {
+    def fromEdges(src: Array[Long], dst: Array[Long]): Csr = {
+      val ids = (src ++ dst).distinct.sorted
+      val n = ids.length
+      val si = src.map(java.util.Arrays.binarySearch(ids, _))
+      val off = new Array[Int](n + 1)
+      si.foreach(s => off(s + 1) += 1)
+      for (i <- 0 until n) off(i + 1) += off(i)
+      val fill = off.clone()
+      val nbr = new Array[Int](si.length)
+      for (j <- si.indices) {
+        nbr(fill(si(j))) = java.util.Arrays.binarySearch(ids, dst(j))
+        fill(si(j)) += 1
+      }
+      Csr(ids, off, nbr)
+    }
+  }
+
+  /** One Brandes dependency term, floor(σ_v · (10⁶ + δ_w) / σ_w), with
+    * the product in 128-bit range. Throws where the shuffled path's
+    * ANSI BIGINT add and DECIMAL-to-BIGINT cast throw. */
+  private def brandesTerm(sv: Long, dw: Long, sw: Long): Long = {
+    val m = Math.addExact(1000000L, dw)
+    val lo = sv * m
+    if (Math.multiplyHigh(sv, m) == 0L && lo >= 0L) lo / sw
+    else java.math.BigInteger.valueOf(sv)
+      .multiply(java.math.BigInteger.valueOf(m))
+      .divide(java.math.BigInteger.valueOf(sw)).longValueExact()
+  }
+
+  /** Per-task state of the pivot-parallel path: |V|-sized arrays
+    * allocated once, with only the entries a pivot touched reset after
+    * it, so each pivot costs O(|ball|). */
+  private final class BrandesPass(g: Csr, maxDepth: Int) {
+    private val dist = Array.fill(g.ids.length)(-1)
+    private val sigma = new Array[Long](g.ids.length)
+    private val delta = new Array[Long](g.ids.length)
+    // the pivot's ball in BFS order; level d is ball(bound(d) until bound(d+1))
+    private val ball = new Array[Int](g.ids.length)
+    private val bound = new Array[Int](maxDepth + 2)
+
+    /** (node, δ_micro) for every node at distance 1..top from pivot
+      * index `p`, the deepest level with δ = 0. */
+    def dependencies(p: Int): Array[(Long, Long)] = {
+      dist(p) = 0; sigma(p) = 1L; ball(0) = p
+      bound(0) = 0; bound(1) = 1
+      var size = 1
+      var top = 0
+      var growing = true
+      while (growing && top < maxDepth) {
+        var i = bound(top)
+        while (i < bound(top + 1)) {
+          val v = ball(i)
+          var j = g.off(v)
+          while (j < g.off(v + 1)) {
+            val w = g.nbr(j)
+            if (dist(w) < 0) {
+              dist(w) = top + 1; sigma(w) = sigma(v); ball(size) = w; size += 1
+            } else if (dist(w) == top + 1) {
+              sigma(w) = Math.addExact(sigma(w), sigma(v))
+            }
+            j += 1
+          }
+          i += 1
+        }
+        if (size > bound(top + 1)) { top += 1; bound(top + 1) = size }
+        else growing = false
+      }
+      var d = top - 1
+      while (d >= 1) {
+        var i = bound(d)
+        while (i < bound(d + 1)) {
+          val v = ball(i)
+          var acc = 0L
+          var j = g.off(v)
+          while (j < g.off(v + 1)) {
+            val w = g.nbr(j)
+            if (dist(w) == d + 1)
+              acc = Math.addExact(acc, brandesTerm(sigma(v), delta(w), sigma(w)))
+            j += 1
+          }
+          delta(v) = acc
+          i += 1
+        }
+        d -= 1
+      }
+      val out = Array.tabulate(size - 1) { i =>
+        val v = ball(i + 1); (g.ids(v), delta(v)) }
+      for (i <- 0 until size) {
+        val v = ball(i); dist(v) = -1; sigma(v) = 0L; delta(v) = 0L
+      }
+      out
+    }
+  }
+
+  /** Pivot-parallel [[betweennessSampled]]: `e` fits the broadcast
+    * threshold, so it ships to every task as one CSR and the pivots
+    * split across tasks. */
+  private def betweennessByPivot(e: DataFrame, nodes: DataFrame,
+      piv: DataFrame, maxDepth: Int): DataFrame = {
+    val spark = e.sparkSession
+    val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    val pairs = e.as(longPair).collect()
+    val g = Csr.fromEdges(pairs.map(_._1), pairs.map(_._2))
+    val pivots = piv.collect()
+      .map(r => java.util.Arrays.binarySearch(g.ids, r.getLong(0)))
+    // no pivot means no node: the tail alone gives the empty frame
+    // (a delta stage there would be dropped by AQE's empty-join
+    // propagation and left to serialize after the broadcast died)
+    if (pivots.isEmpty) betweennessTail(nodes, None)
+    else {
+      val sc = spark.sparkContext
+      val bc = sc.broadcast(g)
+      val deltas = sc.parallelize(pivots.toSeq,
+          math.min(pivots.length, sc.defaultParallelism))
+        .mapPartitions { it =>
+          val pass = new BrandesPass(bc.value, maxDepth)
+          it.flatMap(pass.dependencies)
+        }
+      val out = betweennessTail(nodes,
+        Some(spark.createDataset(deltas)(longPair).toDF("v", "delta")))
+      bc.destroy()
+      out
+    }
+  }
+
+  /** Level-synchronous [[betweennessSampled]] over the shuffled edge
+    * list — the path past the broadcast threshold. */
+  private def betweennessShuffled(e: DataFrame, nodes: DataFrame,
+      piv: DataFrame, maxDepth: Int): DataFrame = {
     // ---- forward: levels(d) = (p, v, sigma) at exact distance d ----
     val levels = scala.collection.mutable.ArrayBuffer(
       piv.select(col("p"), col("p").as("v"), lit(1L).as("sigma"))
@@ -1727,7 +1871,7 @@ object Graph {
     var emptied = false
     while (d <= maxDepth && !emptied) {
       val last = levels.last
-      val next = last.join(eJ, last("v") === e("esrc"))
+      val next = last.join(e, last("v") === e("esrc"))
         .select(col("p"), col("edst").as("v"), col("sigma"))
         .join(visited, Seq("p", "v"), "left_anti")
         .groupBy(col("p"), col("v")).agg(sum(col("sigma")).as("sigma"))
@@ -1740,10 +1884,8 @@ object Graph {
       }
     }
     // ---- backward: deepest level's delta is 0 (truncation bound) ----
-    // (depthTop == 0 — pivots with no out-edges — falls through: the
-    // parts list then holds only level-0 pivot self-rows, which the
-    // i >= 1 guard below would normally exclude; map them to the same
-    // all-zero contract instead)
+    // (depthTop == 0 — pivots with no out-edges — leaves no delta
+    // part: the tail then gives every node bc 0 and n_piv 0)
     val depthTop = levels.size - 1
     var below = levels(depthTop)
       .select(col("p"), col("v"), lit(0L).as("delta"))
@@ -1752,7 +1894,7 @@ object Graph {
     var i = depthTop - 1
     while (i >= 1) {
       val lvl = levels(i)
-      val terms = lvl.join(eJ, lvl("v") === e("esrc"))
+      val terms = lvl.join(e, lvl("v") === e("esrc"))
         .select(col("p"), col("v"), col("sigma"), col("edst").as("w"))
         .join(below.select(col("p"), col("v").as("w"),
             col("delta").as("dw")).join(
@@ -1771,19 +1913,26 @@ object Graph {
       below = deltaI
       i -= 1
     }
-    val out = (if (deltaParts.isEmpty)
-        nodes.select(col("node"), lit(0L).as("bc_micro"),
-          lit(0L).as("n_piv"))
-      else {
-        val touched = deltaParts.reduce(_ unionByName _)
-          .groupBy(col("v").as("node"))
-          .agg(sum(col("delta")).as("bc_micro"),
-            count(lit(1)).as("n_piv"))
-        nodes.join(touched, Seq("node"), "left")
-          .na.fill(0L, Seq("bc_micro", "n_piv"))
-      }).localCheckpoint(true)
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
+    val out = betweennessTail(nodes,
+      deltaParts.reduceOption(_ unionByName _))
+    // the round pins die once the returned frame holds its own blocks
+    (piv +: (levels ++ deltaParts)).flatMap(SuffixRankMemo.checkpointRdd)
+      .foreach(_.unpersist(blocking = false))
     out
   }
+
+  /** Shared tail of both [[betweennessSampled]] paths: per-node sum and
+    * pivot count of the (v, delta) rows, every graph node kept (bc 0,
+    * n_piv 0 when no pivot reached it), pinned with one eager
+    * localCheckpoint. */
+  private def betweennessTail(nodes: DataFrame,
+      deltas: Option[DataFrame]): DataFrame = (deltas match {
+    case None =>
+      nodes.select(col("node"), lit(0L).as("bc_micro"), lit(0L).as("n_piv"))
+    case Some(rows) =>
+      val touched = rows.groupBy(col("v").as("node"))
+        .agg(sum(col("delta")).as("bc_micro"), count(lit(1)).as("n_piv"))
+      nodes.join(touched, Seq("node"), "left")
+        .na.fill(0L, Seq("bc_micro", "n_piv"))
+  }).localCheckpoint(true)
 }

@@ -9,13 +9,6 @@ import graft.ops.BroadcastGuard
   */
 class BroadcastGuardSpec extends SparkSpec {
 
-  private def withThreshold[A](v: String)(f: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, v)
-    try f finally spark.conf.set(key, old)
-  }
-
   test("numeric threshold parses and bounds the estimate strictly") {
     withThreshold((1L << 20).toString) {
       assert(BroadcastGuard.thresholdBytes(spark) === (1L << 20))

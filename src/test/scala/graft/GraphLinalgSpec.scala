@@ -861,6 +861,15 @@ class GraphLinalgSpec extends SparkSpec {
 
   // --- betweennessSampled ---------------------------------------------
 
+  /** Runs `f` on both sides of betweennessSampled's broadcast guard:
+    * the session default (these graphs fit, so the pivot-parallel path
+    * over the broadcast adjacency) and a disabled threshold (-1, the
+    * shuffled level loop). */
+  private def onBothPaths(f: => Unit): Unit = {
+    withClue("[default threshold] ")(f)
+    withClue("[threshold -1] ")(withThreshold("-1")(f))
+  }
+
   test("betweennessSampled: bridge node beats higher-degree clique hubs") {
     // two triangles {1,2,3} and {5,6,7} joined by bridge 4:
     //   deg(3) = deg(5) = 3, deg(4) = 2 — yet every one of the 9
@@ -870,32 +879,36 @@ class GraphLinalgSpec extends SparkSpec {
     //   bc_micro = 2e6 x textbook betweenness.
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L),
       (5L, 6L), (5L, 7L), (6L, 7L)).toDF("src", "dst")
-    val bc = Graph.betweennessSampled(edges, "src", "dst", k = 7,
-        maxDepth = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // textbook: bc(4) = 9 (3x3 cross pairs), bc(3) = bc(5) = 8
-    // ({1,2} x {4,5,6,7}), clique leaves 0
-    assert(bc == Map(1L -> 0L, 2L -> 0L, 3L -> 16000000L,
-      4L -> 18000000L, 5L -> 16000000L, 6L -> 0L, 7L -> 0L), bc)
+    onBothPaths {
+      val bc = Graph.betweennessSampled(edges, "src", "dst", k = 7,
+          maxDepth = 4)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // textbook: bc(4) = 9 (3x3 cross pairs), bc(3) = bc(5) = 8
+      // ({1,2} x {4,5,6,7}), clique leaves 0
+      assert(bc == Map(1L -> 0L, 2L -> 0L, 3L -> 16000000L,
+        4L -> 18000000L, 5L -> 16000000L, 6L -> 0L, 7L -> 0L), bc)
+    }
   }
 
   test("betweennessSampled: path graph dependencies and n_piv; partition invariance") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .toDF("src", "dst")
-    val out = Graph.betweennessSampled(edges, "src", "dst", k = 5,
-        maxDepth = 4)
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     // textbook path bc: ends 0, next-in 3, middle 4; every node is
     // reached by the 4 OTHER pivots within depth 4
     val expect = Map(1L -> ((0L, 4L)), 2L -> ((6000000L, 4L)),
       3L -> ((8000000L, 4L)), 4L -> ((6000000L, 4L)), 5L -> ((0L, 4L)))
-    assert(out == expect, out)
-    // partition invariance: 7-way repartition of the edge list yields
-    // the identical frame (the localCheckpoint pinning discipline)
-    val out7 = Graph.betweennessSampled(edges.repartition(7), "src",
-        "dst", k = 5, maxDepth = 4)
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    assert(out7 == expect, out7)
+    onBothPaths {
+      val out = Graph.betweennessSampled(edges, "src", "dst", k = 5,
+          maxDepth = 4)
+        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+      assert(out == expect, out)
+      // partition invariance: 7-way repartition of the edge list yields
+      // the identical frame (the localCheckpoint pinning discipline)
+      val out7 = Graph.betweennessSampled(edges.repartition(7), "src",
+          "dst", k = 5, maxDepth = 4)
+        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+      assert(out7 == expect, out7)
+    }
   }
 
   test("betweennessSampled: sigma multiplicity floors per-term (4-cycle)") {
@@ -904,13 +917,15 @@ class GraphLinalgSpec extends SparkSpec {
     // floor(1 * 1e6 * 1 / 2) = 500000 — the floor-per-term contract
     val edges = Seq((1L, 2L), (2L, 4L), (1L, 3L), (3L, 4L))
       .toDF("src", "dst")
-    val bc = Graph.betweennessSampled(edges, "src", "dst", k = 4,
-        maxDepth = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // each corner node carries half a pair from each of its two
-    // adjacent pivots: 2 x 500000 = 1000000
-    assert(bc == Map(1L -> 1000000L, 2L -> 1000000L, 3L -> 1000000L,
-      4L -> 1000000L), bc)
+    onBothPaths {
+      val bc = Graph.betweennessSampled(edges, "src", "dst", k = 4,
+          maxDepth = 3)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // each corner node carries half a pair from each of its two
+      // adjacent pivots: 2 x 500000 = 1000000
+      assert(bc == Map(1L -> 1000000L, 2L -> 1000000L, 3L -> 1000000L,
+        4L -> 1000000L), bc)
+    }
   }
 
   test("betweennessSampled: k pivots are the smallest knuth-mix ranks") {
@@ -918,14 +933,60 @@ class GraphLinalgSpec extends SparkSpec {
     // shrinks accordingly and results stay deterministic run-to-run
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .toDF("src", "dst")
-    val a = Graph.betweennessSampled(edges, "src", "dst", k = 1,
-        maxDepth = 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Graph.betweennessSampled(edges, "src", "dst", k = 1,
-        maxDepth = 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b)
-    // with a single pivot the dependency chain is a straight line:
-    // one endpoint-path worth of mass, strictly less than the k=5 run
-    assert(a.map(_._2).sum < 28000000L)
+    onBothPaths {
+      val a = Graph.betweennessSampled(edges, "src", "dst", k = 1,
+          maxDepth = 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val b = Graph.betweennessSampled(edges, "src", "dst", k = 1,
+          maxDepth = 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(a == b)
+      // with a single pivot the dependency chain is a straight line:
+      // one endpoint-path worth of mass, strictly less than the k=5 run
+      assert(a.map(_._2).sum < 28000000L)
+    }
+  }
+
+  test("betweennessSampled: an all-self-loop edge list is an empty graph") {
+    // self-loops are dropped before anything else, so no node remains
+    val loops = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("src", "dst")
+    onBothPaths {
+      val out = Graph.betweennessSampled(loops, "src", "dst", k = 4,
+        maxDepth = 3)
+      assert(out.columns.toSeq == Seq("node", "bc_micro", "n_piv"))
+      assert(out.count() == 0L)
+    }
+  }
+
+  test("betweennessSampled: sink pivots (depthTop == 0) give every node bc 0 and n_piv 0") {
+    // a directed out-star whose hub has the LARGEST (knuth-mix, node)
+    // rank: k = 7 of 8 nodes picks exactly the leaves, none of which
+    // has an out-edge, so no BFS leaves its pivot
+    val hub = (1L to 8L).toDF("id")
+      .select(col("id"), expr(Graph.knuthMixExpr("id")).as("hk"))
+      .orderBy(col("hk").desc, col("id").desc).first().getLong(0)
+    val edges = (1L to 8L).filter(_ != hub).map(v => (hub, v))
+      .toDF("src", "dst")
+    onBothPaths {
+      val out = Graph.betweennessSampled(edges, "src", "dst", k = 7,
+          maxDepth = 3, directed = true)
+        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+      assert(out == (1L to 8L).map(_ -> ((0L, 0L))).toMap, out)
+    }
+  }
+
+  test("betweennessSampled: only the returned frame's checkpoint stays persisted") {
+    // the persisted edge list and node set, the round pins of the
+    // shuffled loop and the pivot path's broadcast all die with the
+    // call; what is left is the returned frame's own eager checkpoint
+    val edges = Seq((1L, 2L), (2L, 4L), (1L, 3L), (3L, 4L), (4L, 5L))
+      .toDF("src", "dst")
+    onBothPaths {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = Graph.betweennessSampled(edges, "src", "dst", k = 3,
+        maxDepth = 3)
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added == graft.ops.SuffixRankMemo.checkpointRdd(out)
+        .map(_.id).toSet, added)
+    }
   }
 
   // --- topEigenK / pcaWhitenCheck (r15) -------------------------------

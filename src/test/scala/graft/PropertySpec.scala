@@ -97,7 +97,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("connectedComponents matches union-find on random graphs") {
-    val prop = Prop.forAll(genEdges) { es =>
+    val prop = Prop.forAllNoShrink(genEdges) { es =>
       val pairs = es.toDF("id_a", "id_b")
       val got = Dedup.connectedComponents(pairs)
         .as[(Long, Long)].collect().toMap
@@ -107,7 +107,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("connectedComponentsStar matches union-find on random graphs") {
-    val prop = Prop.forAll(genEdges) { es =>
+    val prop = Prop.forAllNoShrink(genEdges) { es =>
       val pairs = es.toDF("id_a", "id_b")
       val got = Dedup.connectedComponentsStar(pairs)
         .as[(Long, Long)].collect().toMap
@@ -328,7 +328,7 @@ class PropertySpec extends SparkSpec {
     } yield (a, b)).map(_.distinct).suchThat(_.nonEmpty)
 
   test("pageRankPpb matches the sequential integer recurrence on random digraphs") {
-    val prop = Prop.forAll(genDirEdges) { es =>
+    val prop = Prop.forAllNoShrink(genDirEdges) { es =>
       val got = graft.ops.Graph.pageRankPpb(es.toDF("src", "dst"), "src", "dst", 3)
         .as[(Long, Long)].collect().toMap
       got == pageRankRef(es, 3)
@@ -463,7 +463,7 @@ class PropertySpec extends SparkSpec {
     val genSeeds = Gen.nonEmptyMap(for {
       n <- Gen.choose(0L, 9L); l <- Gen.oneOf("A", "B", "C")
     } yield (n, l))
-    val prop = Prop.forAll(genDirEdges, genSeeds) { (es, sd) =>
+    val prop = Prop.forAllNoShrink(genDirEdges, genSeeds) { (es, sd) =>
       val got = graft.ops.Graph.labelPropagate(es.toDF("src", "dst"),
           "src", "dst", sd.toSeq.toDF("node", "label"), "node", "label", 2)
         .select($"node", $"label").as[(Long, String)].collect().toMap
@@ -569,43 +569,80 @@ class PropertySpec extends SparkSpec {
     check("coocc-vs-ref", prop, minTests = 5)
   }
 
-  test("betweennessSampled (all pivots) matches brute-force path counting on random trees") {
-    // random labeled trees: every shortest path is UNIQUE (sigma = 1
-    // everywhere), so the micro floors are exact and full-pivot
-    // bc_micro must equal 1e6 x the brute-force count of ordered
-    // (source, target) pairs whose unique path passes through v
+  /** Full-pivot brute-force betweenness of a tree: BFS parent pointers
+    * from every source, walked back from every target. Every shortest
+    * path in a tree is UNIQUE (sigma = 1 everywhere), so the micro
+    * floors are exact and bc_micro(v) must equal 1e6 x the count of
+    * ordered (source, target) pairs whose path passes through v. */
+  private def bruteTreeBc(es: List[(Long, Long)]): Map[Long, Long] = {
+    val n = es.map(e => math.max(e._1, e._2)).max.toInt + 1
+    val adj = Array.fill(n)(List.empty[Int])
+    es.foreach { case (a, b) =>
+      adj(a.toInt) ::= b.toInt; adj(b.toInt) ::= a.toInt }
+    def pathFrom(s: Int, t: Int): List[Int] = {
+      val par = Array.fill(n)(-1); par(s) = s
+      var frontier = List(s)
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(u => adj(u).filter(par(_) == -1)
+          .map { v => par(v) = u; v })
+      }
+      var cur = t; var acc = List(t)
+      while (cur != s) { cur = par(cur); acc ::= cur }
+      acc
+    }
+    val want = Array.fill(n)(0L)
+    for (s <- 0 until n; tt <- 0 until n if s != tt)
+      pathFrom(s, tt).drop(1).dropRight(1).foreach(want(_) += 1L)
+    (0 until n).map(v => v.toLong -> want(v) * 1000000L).toMap
+  }
+
+  test("betweennessSampled: broadcast-adjacency path equals the shuffled path; trees match brute force") {
+    // one property over two input families, each case run twice: on
+    // the session default (these graphs fit the broadcast guard, so
+    // the pivot-parallel path) and with the threshold disabled (-1,
+    // the shuffled level loop) — the two must agree row for row.
+    //  - random labeled trees, all pivots, depth 9: also checked
+    //    against the brute-force path count
+    //  - random general graphs: a planted diamond (sigma > 1) plus
+    //    random edges (cycles, duplicates, self-loops), shifted ids so
+    //    the hash-picked pivots move, directed or not, k < n or k = n,
+    //    maxDepth 2-4
+    final case class BcCase(es: List[(Long, Long)], k: Int, maxDepth: Int,
+        directed: Boolean, tree: Boolean)
     val genTree = for {
       n <- Gen.choose(4, 9)
       parents <- Gen.sequence[List[Int], Int](
         (1 until n).map(i => Gen.choose(0, i - 1)))
-    } yield parents.zipWithIndex.map { case (p, i) =>
-      (p.toLong, (i + 1).toLong) }
-    val prop = Prop.forAll(genTree) { es =>
-      val n = es.map(e => math.max(e._1, e._2)).max.toInt + 1
-      val adj = Array.fill(n)(List.empty[Int])
-      es.foreach { case (a, b) =>
-        adj(a.toInt) ::= b.toInt; adj(b.toInt) ::= a.toInt }
-      // brute force: BFS parent pointers from every source, walk back
-      def pathFrom(s: Int, t: Int): List[Int] = {
-        val par = Array.fill(n)(-1); par(s) = s
-        var frontier = List(s)
-        while (frontier.nonEmpty) {
-          frontier = frontier.flatMap(u => adj(u).filter(par(_) == -1)
-            .map { v => par(v) = u; v })
-        }
-        var cur = t; var acc = List(t)
-        while (cur != s) { cur = par(cur); acc ::= cur }
-        acc
-      }
-      val want = Array.fill(n)(0L)
-      for (s <- 0 until n; tt <- 0 until n if s != tt)
-        pathFrom(s, tt).drop(1).dropRight(1).foreach(want(_) += 1L)
-      val got = graft.ops.Graph.betweennessSampled(
-          es.toDF("src", "dst"), "src", "dst", k = n, maxDepth = 9)
-        .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
-      (0 until n).forall(v => got(v) == want(v) * 1000000L)
+    } yield BcCase(parents.zipWithIndex.map { case (p, i) =>
+      (p.toLong, (i + 1).toLong) }, n, 9, directed = false, tree = true)
+    val genGraph = for {
+      n <- Gen.choose(4, 9)
+      m <- Gen.choose(n / 2, 2 * n)
+      extra <- Gen.listOfN(m,
+        Gen.zip(Gen.choose(0L, n - 1L), Gen.choose(0L, n - 1L)))
+      off <- Gen.choose(0L, 1000L)
+      directed <- Gen.oneOf(true, false)
+      k <- Gen.oneOf(Gen.choose(1, n - 1), Gen.const(n))
+      depth <- Gen.choose(2, 4)
+    } yield BcCase(
+      (List((0L, 1L), (0L, 2L), (1L, 3L), (2L, 3L)) ++ extra)
+        .map { case (a, b) => (a + off, b + off) },
+      k, depth, directed, tree = false)
+    def run(c: BcCase): Map[Long, (Long, Long)] =
+      graft.ops.Graph.betweennessSampled(c.es.toDF("src", "dst"), "src",
+          "dst", k = c.k, maxDepth = c.maxDepth, directed = c.directed)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
+        .toMap
+    // no shrinking: every shrink step is more Spark jobs, and the
+    // unshrunk case is already tiny
+    val prop = Prop.forAllNoShrink(Gen.oneOf(genTree, genGraph)) { c =>
+      val byPivot = run(c)
+      val shuffled = withThreshold("-1")(run(c))
+      byPivot == shuffled &&
+        (!c.tree || byPivot.map { case (v, (bc, _)) => v -> bc } ==
+          bruteTreeBc(c.es))
     }
-    check("betweenness-vs-bruteforce-trees", prop, minTests = 8)
+    check("betweenness-paths-and-bruteforce-trees", prop, minTests = 12)
   }
 
   // ---- suffix-rank spans vs brute-force substring census -------------

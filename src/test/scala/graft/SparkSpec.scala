@@ -10,6 +10,15 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sfTiny = "/root/testdata/sf0.001"
   val sfSmall = "/root/testdata/sf0.01"
+
+  /** Runs `f` with spark.sql.autoBroadcastJoinThreshold set to `v`
+    * (-1 disables broadcasting), restoring the old value afterwards. */
+  def withThreshold[A](v: String)(f: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, v)
+    try f finally spark.conf.set(key, old)
+  }
 }
 
 object SparkSpec {
