@@ -11,12 +11,6 @@ import org.apache.spark.sql.classic.ClassicConversions.castToImpl
   * rounds) and broadcast it only while the estimate fits the session
   * `autoBroadcastJoinThreshold` — past it the shuffled plan is kept
   * byte-for-byte, so cluster-scale posture is unchanged.
-  *
-  * Centralized (r17 ADVICE): the threshold read and the sizing
-  * arithmetic were copy-pasted across 14 sites with drifting constants,
-  * and every site parsed the conf with `.toLong` — Spark accepts
-  * byte-size strings ("10MB", "10m") for this conf, which would have
-  * thrown NumberFormatException on any session that sets a unit suffix.
   */
 private[graft] object BroadcastGuard {
   /** Conservative bytes/row for frames of a few longs (node ids,

@@ -1019,28 +1019,26 @@ object Corpus {
     val keyed = docs.select(col(id), explode(keysUdf(norm)).as("k"))
       .select(col(id), col("k._1").as("p"),
         monotonically_increasing_id().as("__gid"), col("k"))
-    var ranks = classIds(keyed,
-      (2 to (k0 + perLong - 1) / perLong + 1).map(i => col(s"k._$i")))
-    // doubling past k₀: class_{k+s}(p) = class of (r_k(p), r_k(p+s));
-    // the inner join drops blocks that would run past the doc end
-    var k = k0
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    while (k < minLen) {
-      val shift = math.min(k, minLen - k)
-      val cur = ranks.localCheckpoint(true)
-      rounds += cur
-      val right = cur.select(col(id).as("__rid"),
-        (col("p") - shift).as("__rp"), col("r").as("__r2"))
-      ranks = classIds(
-        cur.join(right, col(id) === col("__rid") && col("p") === col("__rp")),
-        Seq(col("r"), col("__r2")))
-      k += shift
+    val out = PinScope { pins =>
+      var ranks = classIds(keyed,
+        (2 to (k0 + perLong - 1) / perLong + 1).map(i => col(s"k._$i")))
+      // doubling past k₀: class_{k+s}(p) = class of (r_k(p), r_k(p+s));
+      // the inner join drops blocks that would run past the doc end
+      var k = k0
+      while (k < minLen) {
+        val shift = math.min(k, minLen - k)
+        val cur = pins.pin(ranks)
+        val right = cur.select(col(id).as("__rid"),
+          (col("p") - shift).as("__rp"), col("r").as("__r2"))
+        ranks = classIds(
+          cur.join(right, col(id) === col("__rid") && col("p") === col("__rp")),
+          Seq(col("r"), col("__r2")))
+        k += shift
+      }
+      // pin of the RETURNED frame, read twice by every consumer and
+      // shared by all three via the memo; the round pins die with the scope
+      pins.pin(ranks.select(col(id), col("p"), col("r")))
     }
-    // eager pin of the RETURNED frame, read twice by every consumer and
-    // shared by all three via the memo; round pins and the broadcast die
-    val out = ranks.select(col(id), col("p"), col("r")).localCheckpoint(true)
-    rounds.flatMap(SuffixRankMemo.checkpointRdd)
-      .foreach(_.unpersist(blocking = false))
     bc.destroy()
     out
   }
@@ -2437,7 +2435,6 @@ object Corpus {
 private[graft] object SuffixRankMemo {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-  import org.apache.spark.sql.execution.LogicalRDD
   import org.apache.spark.storage.StorageLevel
 
   private final case class Entry(session: SparkSession, plan: LogicalPlan,
@@ -2473,13 +2470,6 @@ private[graft] object SuffixRankMemo {
   private def live(e: Entry): Boolean =
     e.rdd.exists(_.getStorageLevel != StorageLevel.NONE)
 
-  private[graft] def checkpointRdd(frame: DataFrame)
-      : Option[org.apache.spark.rdd.RDD[_]] =
-    frame.queryExecution.analyzed match {
-      case l: LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
-
   private[ops] def getOrCompute(df: DataFrame, id: String, text: String,
       minLen: Int)(compute: => DataFrame): DataFrame = synchronized {
     val key = df.select(col(id), col(text)).queryExecution.analyzed
@@ -2495,7 +2485,7 @@ private[graft] object SuffixRankMemo {
         val frame = compute
         computeSecs += (System.nanoTime() - t0) / 1e9
         entry = Some(Entry(df.sparkSession, key, id, text, minLen, frame,
-          checkpointRdd(frame)))
+          PinScope.checkpointRdd(frame)))
         frame
     }
   }

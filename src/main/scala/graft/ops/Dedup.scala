@@ -258,28 +258,26 @@ object Dedup {
     * graph-diameter rounds (near-dup clusters are near-cliques, so 2–3).
     * Each round is one shuffle join + one aggregation; the driver only
     * checks a changed-count per round (no data collected). At 100 TB
-    * this is the standard large/small-star regime; cap `maxIter` and
-    * persist between rounds exactly as done here.
+    * this is the standard large/small-star regime; cap `maxIter`.
     *
     * @param pairs (id_a, id_b) candidate edges, id_a < id_b
     * @return (id, cluster) — cluster = min id in the component;
     *         singletons (ids absent from pairs) are not emitted
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
+  def connectedComponents(pairs: DataFrame,
+      maxIter: Int = 10): DataFrame = PinScope { pins =>
     // persist the edge list: every round joins against it AND the
     // upstream (e.g. the whole minhash-LSH pipeline) would otherwise be
     // re-executed per iteration (measured 3× the total runtime)
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist()
+    val edges = pins.cache(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // seed with the 1-hop minimum (min over neighbors ∪ self): the same
     // single aggregation a distinct would cost, but it folds what would
     // be the first propagation round into initialization — near-clique
     // dup graphs then converge in 2 rounds instead of 3 (measured ~0.8 s
     // per CC call at sf0.1)
-    var labels = edges.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-      .select(col("src").as("id"), least(col("src"), col("mn")).as("lbl"))
-      .persist()
+    var labels = pins.cache(edges.groupBy(col("src")).agg(min(col("dst")).as("mn"))
+      .select(col("src").as("id"), least(col("src"), col("mn")).as("lbl")))
     // r17 OPTIMIZATION (opt guide §2.4, §3.1): the label frame is
     // checkpointed per round (no stats), so the propagation join
     // defaulted to sort-merge — the symmetric edge list reshuffled and
@@ -302,27 +300,14 @@ object Dedup {
       val viaNeighbor = edges.join(if (bcastOk) broadcast(lbl) else lbl, "src")
         .select(col("dst").as("id"), col("lbl"),
           when(lit(false), col("lbl")).as("old"))
-      val next = labels
+      labels = pins.pin(labels
         .select(col("id"), col("lbl"), col("lbl").as("old")).union(viaNeighbor)
-        .groupBy(col("id")).agg(min(col("lbl")).as("lbl"), max(col("old")).as("old"))
-        .localCheckpoint(true)
-      changed = next.filter(col("lbl") =!= col("old")).count()
-      labels.unpersist()
-      labels = next
+        .groupBy(col("id")).agg(min(col("lbl")).as("lbl"), max(col("old")).as("old")))
+      changed = labels.filter(col("lbl") =!= col("old")).count()
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] iter=$iter changed=$changed t=${System.nanoTime() / 1e9}")
     }
-    // cut lineage + release the loop caches before returning: the final
-    // labels are re-materialized via localCheckpoint (small frame, one
-    // extra pass over the already-cached result), so repeated calls
-    // don't accumulate loop-iteration caches in executor storage — the
-    // checkpoint blocks themselves are GC'd by the ContextCleaner once
-    // the returned frame is dropped (ADVICE r2)
-    val out = labels.localCheckpoint(true)
-    labels.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
-    out.select(col("id"), col("lbl").as("cluster"))
+    // the last round's pin is the result (maxIter = 0 pins the seed)
+    pins.pin(labels).select(col("id"), col("lbl").as("cluster"))
   }
 
   /** Connected components via alternating large-star/small-star edge
@@ -342,7 +327,8 @@ object Dedup {
     *  - small-star(u): over edges kept as (big, small): link every
     *    smaller neighbor (and u itself) to m
     */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+  def connectedComponentsStar(pairs: DataFrame,
+      maxIter: Int = 25): DataFrame = PinScope { pins =>
     // canonical (u > v) distinct edges, self-loops dropped
     def canon(e: DataFrame): DataFrame = e
       .filter(col("u") =!= col("v"))
@@ -355,8 +341,7 @@ object Dedup {
     // the previous round's, so without lineage truncation Catalyst
     // analysis cost grows exponentially in the round count — the exact
     // failure mode this O(log n) variant exists to serve (many rounds)
-    var edges = canon(pairs.select(col("id_a").as("u"), col("id_b").as("v")))
-      .localCheckpoint(true)
+    var edges = pins.pin(canon(pairs.select(col("id_a").as("u"), col("id_b").as("v"))))
     // node set comes from the checkpointed edge list so the (possibly
     // expensive) upstream runs exactly once; self-pairs are ignored
     val nodes = sym(edges).select(col("u").as("id")).distinct()
@@ -386,12 +371,11 @@ object Dedup {
       // small-star on canonical (u > v) edges: m = min of the smaller
       // neighbors (all v < u here, so min(v) IS m); relink v's and u
       val ssMin = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      // eager checkpoint doubles as the round's materialization barrier;
-      // the previous round's blocks are freed by the ContextCleaner
-      val next = canon(
+      // eager pin doubles as the round's materialization barrier
+      val next = pins.pin(canon(
         large.join(if (bcastM) broadcast(ssMin) else ssMin, "u")
           .select(col("v").as("u"), col("m").as("v"))
-          .union(ssMin.select(col("u"), col("m").as("v")))).localCheckpoint(true)
+          .union(ssMin.select(col("u"), col("m").as("v")))))
       // convergence = edge-set fixpoint: no new edges (anti-join empty)
       // AND same cardinality (a strict subset is still a change).
       // r17 OPTIMIZATION: the anti-join only DECIDES anything when the
@@ -407,8 +391,6 @@ object Dedup {
       prevCnt = newCnt
       edges = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc-star] iter=$iter changed=$changed")
     }
     // fixpoint: edges are stars (u → component min v); roots map to
     // themselves, nodes that contracted away rejoin via the node set

@@ -43,7 +43,7 @@ object Graph {
     * @return (node, rank_ppb: Long) for every node appearing in edges
     */
   def pageRankPpb(edges: DataFrame, src: String, dst: String,
-      iterations: Int = 3, dampingPct: Int = 85): DataFrame = {
+      iterations: Int = 3, dampingPct: Int = 85): DataFrame = PinScope { pins =>
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations (fixed small counts " +
         "are the point of the integer formulation)")
@@ -53,67 +53,78 @@ object Graph {
     // persist e too: deg/ed/nodes scan it 4x, and the caller's edge
     // BUILD (typically a join+distinct) would re-execute each time
     // (measured at sf0.1: q171 5.5 -> 5.2 s, q171c 8.1 -> 5.5 s warm)
-    val e = edges.select(col(src).cast("long").as("src"),
-      col(dst).cast("long").as("dst")).persist()
-    // out-degree once; joined per round. Persist both: every iteration
-    // (and the final action) would otherwise rescan the upstream plan.
-    // Deliberately a plain shuffled join per round: rounds re-execute
-    // the prior chain, but sort-shuffle files are REUSED (skipped
-    // stages), so the marginal cost per round is one |E|-row exchange
-    // of (dst, contrib) longs (~8 B/edge measured). A broadcast-ranks
-    // + dst-partitioned-edges variant was measured 2.6x SLOWER at 1x
-    // and 1.4x at 100x (PLANS.md round-8): broadcast builds forfeit
-    // shuffle reuse across the iteration chain.
-    val deg = e.groupBy("src").agg(count(lit(1)).as("odeg")).persist()
-    val ed = e.join(deg, "src").persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-
-    // r17 OPTIMIZATION (opt guide §2.4, §3.1; A/B
-    // scripts/ab_pagerank_r17.scala, bit-identical, min-of-5
-    // interleaved 3.95 s → 3.60 s at sf0.1): the rank-side join
-    // strategy is picked DELIBERATELY from a measured |V| — a
-    // checkpointed rank frame carries no stats, so the planner
-    // defaulted every round to a sort-merge join that reshuffled and
-    // re-sorted the |E| frame; while the rank vector fits the session
-    // broadcast threshold (64 B/row conservative) it broadcasts and
-    // |E| stays put, past that the shuffled join is kept. The
-    // per-round nodes LEFT join is replaced by unioning a zero
-    // contribution row per node into the SAME aggregation — one
-    // exchange per round instead of two. (This is NOT the r8
-    // "broadcast-ranks + dst-partitioned-edges" variant that measured
-    // 2.6x slower: edges keep their persisted layout and the shuffled
-    // path is untouched when |V| is large.)
-    val spark = edges.sparkSession
-    val nV = nodes.count()
-    val bcastOk = BroadcastGuard.fits(spark, nV, BroadcastGuard.RowBytesNarrow)
+    val e = pins.cache(edges.select(col(src).cast("long").as("src"),
+      col(dst).cast("long").as("dst")))
+    val (ed, nodes) = rankInputs(pins, e, count(lit(1)))
     val basePpb = (100L - dampingPct) * 1000000000L / 100L
-    var ranks = nodes.select(col("node"), lit(1000000000L).as("rank_ppb"))
+    // contribution of u to each successor: floor(r(u) / outdeg(u)) —
+    // exact in any 64-bit engine; the remainder mass evaporates
+    // identically everywhere.
+    rankLoop(pins, ed, expr("rank_ppb div norm"),
+      nodes.select(col("node"), lit(basePpb).as("b")),
+      nodes.select(col("node"), lit(1000000000L).as("rank_ppb")),
+      nodes.count(), iterations, dampingPct)
+  }
+
+  /** (ed, nodes) for [[rankLoop]]: the edge list `e` (src, dst, ...)
+    * joined with its per-source normaliser `norm` (out-degree or
+    * weight sum), and the node set, all cached. Deliberately a plain
+    * shuffled join per round: rounds re-execute the prior chain, but
+    * sort-shuffle files are REUSED (skipped stages), so the marginal
+    * cost per round is one |E|-row exchange of (dst, contrib) longs
+    * (~8 B/edge measured). A broadcast-ranks + dst-partitioned-edges
+    * variant was measured 2.6x SLOWER at 1x and 1.4x at 100x (PLANS.md
+    * round-8): broadcast builds forfeit shuffle reuse across the
+    * iteration chain. */
+  private def rankInputs(pins: PinScope, e: DataFrame,
+      norm: Column): (DataFrame, DataFrame) = {
+    val deg = pins.cache(e.groupBy("src").agg(norm.as("norm")))
+    val nodes = pins.cache(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
+    (pins.cache(e.join(deg, "src")), nodes)
+  }
+
+  /** The round loop of all three PageRank ops:
+    * r_{i+1}(v) = b(v) + dampingPct · (Σ_{(u,v)} contrib(u, v)) div 100,
+    * with `teleport` (node, b) holding exactly one row per node and
+    * `init` (node, rank_ppb) the starting ranks. Returns the last
+    * round's pin.
+    *
+    * r17 OPTIMIZATION (opt guide §2.4, §3.1; A/B
+    * scripts/ab_pagerank_r17.scala, bit-identical, min-of-5
+    * interleaved 3.95 s → 3.60 s at sf0.1): the rank-side join
+    * strategy is picked DELIBERATELY from the measured |V| `nV` — a
+    * checkpointed rank frame carries no stats, so the planner
+    * defaulted every round to a sort-merge join that reshuffled and
+    * re-sorted the |E| frame; while the rank vector fits the session
+    * broadcast threshold (64 B/row conservative) it broadcasts and
+    * |E| stays put, past that the shuffled join is kept. Each round
+    * unions the teleport rows (node, c = 0, b) into the contribution
+    * aggregation, so sum(c) recovers the contribution mass and sum(b)
+    * the teleport term — one exchange per round, no per-round LEFT
+    * join against the node set. (This is NOT the r8
+    * "broadcast-ranks + dst-partitioned-edges" variant that measured
+    * 2.6x slower: edges keep their persisted layout and the shuffled
+    * path is untouched when |V| is large.)
+    */
+  private def rankLoop(pins: PinScope, ed: DataFrame, contrib: Column,
+      teleport: DataFrame, init: DataFrame, nV: Long, iterations: Int,
+      dampingPct: Int): DataFrame = {
+    val bcastOk = BroadcastGuard.fits(ed.sparkSession, nV,
+      BroadcastGuard.RowBytesNarrow)
+    var ranks = init
     var i = 0
     while (i < iterations) {
-      // contribution of u to each successor: floor(r(u) / outdeg(u)) —
-      // exact in any 64-bit engine; the remainder mass evaporates
-      // identically everywhere.
       val ranked = ranks.withColumnRenamed("node", "src")
-      ranks = ed.join(if (bcastOk) broadcast(ranked) else ranked, "src")
-        .select(col("dst").as("node"),
-          expr("rank_ppb div odeg").as("c"))
-        .unionByName(nodes.select(col("node"), lit(0L).as("c")))
-        .groupBy("node").agg(sum(col("c")).as("s"))
+      ranks = pins.pin(ed.join(if (bcastOk) broadcast(ranked) else ranked, "src")
+        .select(col("dst").as("node"), contrib.as("c"), lit(0L).as("b"))
+        .unionByName(teleport.select(col("node"), lit(0L).as("c"), col("b")))
+        .groupBy("node").agg(sum(col("c")).as("s"), sum(col("b")).as("b"))
         .select(col("node"),
-          (lit(basePpb) + expr(s"($dampingPct * s) div 100"))
-            .as("rank_ppb"))
-        .localCheckpoint(true)
+          (col("b") + expr(s"($dampingPct * s) div 100")).as("rank_ppb")))
       i += 1
     }
-    // one localCheckpoint cuts the iterations-deep lineage so downstream
-    // consumers don't replay the loop per action; loop caches released.
-    val out = ranks.localCheckpoint(true)
-    e.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    ed.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
+    ranks
   }
 
   /** Edge-WEIGHTED PageRank, integer parts-per-billion — the form a
@@ -123,8 +134,8 @@ object Graph {
     * edge weight: contribution u→v = floor(r(u)·w(u,v) / Σw(u)) —
     * still pure 64-bit floor arithmetic, still replayable bit-for-bit
     * in any engine (the unweighted op is the w ≡ 1 special case).
-    * Same loop shape as [[pageRankPpb]]: one |E|-row equi-join +
-    * bounded agg per round, per-round localCheckpoint.
+    * Same round loop as [[pageRankPpb]]: one |E|-row equi-join +
+    * bounded agg per round, each round pinned.
     *
     * Overflow bound: r ≤ ~|V|·1e9 and the product r·w must stay under
     * 2^63 — fine for w up to ~1e4 on million-node graphs; rescale
@@ -135,7 +146,8 @@ object Graph {
     * weights — the natural multigraph collapse.
     */
   def pageRankWeightedPpb(edges: DataFrame, src: String, dst: String,
-      weight: String, iterations: Int = 3, dampingPct: Int = 85): DataFrame = {
+      weight: String, iterations: Int = 3,
+      dampingPct: Int = 85): DataFrame = PinScope { pins =>
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
     require(dampingPct >= 0 && dampingPct <= 100,
@@ -144,44 +156,17 @@ object Graph {
     // select, e here is a groupBy over the caller's edge build, and
     // wsum/ed/nodes would otherwise re-execute that upstream 4x
     // (measured on q171d: 7.1 -> 4.4 s warm at sf0.1)
-    val e = edges.select(col(src).cast("long").as("src"),
+    val e = pins.cache(edges.select(col(src).cast("long").as("src"),
         col(dst).cast("long").as("dst"),
         col(weight).cast("long").as("w"))
       .filter(col("w").isNotNull && col("w") > 0)
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .persist()
-    val wsum = e.groupBy("src").agg(sum(col("w")).as("wsum")).persist()
-    val ed = e.join(wsum, "src").persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-    // r17 OPTIMIZATION: same restructure as [[pageRankPpb]] (which
-    // see) — measured-|V| guarded broadcast of the rank side + zero-row
-    // union instead of the per-round nodes LEFT join. Bit-identical.
-    val spark = edges.sparkSession
-    val nV = nodes.count()
-    val bcastOk = BroadcastGuard.fits(spark, nV, BroadcastGuard.RowBytesNarrow)
+      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")))
+    val (ed, nodes) = rankInputs(pins, e, sum(col("w")))
     val basePpb = (100L - dampingPct) * 1000000000L / 100L
-    var ranks = nodes.select(col("node"), lit(1000000000L).as("rank_ppb"))
-    var i = 0
-    while (i < iterations) {
-      val ranked = ranks.withColumnRenamed("node", "src")
-      ranks = ed.join(if (bcastOk) broadcast(ranked) else ranked, "src")
-        .select(col("dst").as("node"),
-          expr("(rank_ppb * w) div wsum").as("c"))
-        .unionByName(nodes.select(col("node"), lit(0L).as("c")))
-        .groupBy("node").agg(sum(col("c")).as("s"))
-        .select(col("node"),
-          (lit(basePpb) + expr(s"($dampingPct * s) div 100"))
-            .as("rank_ppb"))
-        .localCheckpoint(true)
-      i += 1
-    }
-    val out = ranks.localCheckpoint(true)
-    e.unpersist(blocking = false)
-    wsum.unpersist(blocking = false)
-    ed.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
+    rankLoop(pins, ed, expr("(rank_ppb * w) div norm"),
+      nodes.select(col("node"), lit(basePpb).as("b")),
+      nodes.select(col("node"), lit(1000000000L).as("rank_ppb")),
+      nodes.count(), iterations, dampingPct)
   }
 
   /** HITS hub/authority scores (Kleinberg 1999) as exact integer PATH
@@ -206,32 +191,30 @@ object Graph {
     * @return (node, auth, hub) for every node in the edge list
     */
   def hitsCounts(edges: DataFrame, src: String, dst: String,
-      iterations: Int = 2): DataFrame = {
+      iterations: Int = 2): DataFrame = PinScope { pins =>
     require(iterations >= 1 && iterations <= 4,
       s"iterations must be in [1, 4], got $iterations (unnormalized " +
         "integer HITS grows by ~d_in*d_out per round; keep the product " +
         "under 2^63)")
-    // r17 OPTIMIZATION: same restructure as [[hitsMilliLoop]] (which
-    // see) — measured-|V| broadcast-or-shuffle rank join + zero-row
-    // union instead of the per-half-step nodes LEFT join; one exchange
-    // per half-step instead of two, |E| frame never reshuffled while
-    // the rank vector fits the broadcast threshold. Bit-identical
-    // integer sums.
+    // r17 OPTIMIZATION: measured-|V| broadcast-or-shuffle rank join +
+    // zero-row union instead of the per-half-step nodes LEFT join (the
+    // [[hitsMilliLoop]] restructure); one exchange per half-step
+    // instead of two, |E| frame never reshuffled while the rank vector
+    // fits the broadcast threshold. Bit-identical integer sums.
     val spark = edges.sparkSession
-    val e = edges.select(col(src).cast("long").as("src"),
-      col(dst).cast("long").as("dst")).persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
+    val e = pins.cache(edges.select(col(src).cast("long").as("src"),
+      col(dst).cast("long").as("dst")))
+    val nodes = pins.cache(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val nV = nodes.count()
     val bcastOk = BroadcastGuard.fits(spark, nV, BroadcastGuard.RowBytesNarrow)
     def halfStep(prev: DataFrame, prevC: String, joinKey: String,
         outKey: String, outC: String): DataFrame = {
       val ranked = prev.withColumnRenamed("node", joinKey)
-      e.join(if (bcastOk) broadcast(ranked) else ranked, joinKey)
+      pins.pin(e.join(if (bcastOk) broadcast(ranked) else ranked, joinKey)
         .select(col(outKey).as("node"), col(prevC).as("x"))
         .unionByName(nodes.select(col("node"), lit(0L).as("x")))
-        .groupBy(col("node")).agg(sum(col("x")).as(outC))
-        .localCheckpoint(true)
+        .groupBy(col("node")).agg(sum(col("x")).as(outC)))
     }
     var hub = nodes.select(col("node"), lit(1L).as("h"))
     var auth = nodes.select(col("node"), lit(0L).as("a"))
@@ -241,11 +224,8 @@ object Graph {
       hub = halfStep(auth, "a", "dst", "src", "h")
       i += 1
     }
-    val out = auth.join(hub, Seq("node"))
+    auth.join(hub, Seq("node"))
       .select(col("node"), col("a").as("auth"), col("h").as("hub"))
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
   }
 
   /** HITS with per-round truncating MILLI-rescale — the
@@ -320,23 +300,23 @@ object Graph {
     * A/B-verified row-for-row at sf0.1, scripts/ab_hitsmilli_r17.scala:
     * min-of-5 interleaved 16.6 s → 8.6 s).
     */
-  private def hitsMilliLoop(edgesW: DataFrame, iterations: Int): DataFrame = {
+  private def hitsMilliLoop(edgesW: DataFrame,
+      iterations: Int): DataFrame = PinScope { pins =>
     require(iterations >= 1 && iterations <= 30,
       s"iterations must be in [1, 30], got $iterations")
     val spark = edgesW.sparkSession
-    val e = edgesW.persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
+    val e = pins.cache(edgesW)
+    val nodes = pins.cache(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val nV = nodes.count()
     val bcastOk = BroadcastGuard.fits(spark, nV, BroadcastGuard.RowBytesNarrow)
     def halfStep(prev: DataFrame, prevC: String, joinKey: String,
         outKey: String, outC: String): DataFrame = {
       val ranked = prev.withColumnRenamed("node", joinKey)
-      val summed = e.join(if (bcastOk) broadcast(ranked) else ranked, joinKey)
+      val summed = pins.pin(e.join(if (bcastOk) broadcast(ranked) else ranked, joinKey)
         .select(col(outKey).as("node"), (col(prevC) * col("w")).as("x"))
         .unionByName(nodes.select(col("node"), lit(0L).as("x")))
-        .groupBy(col("node")).agg(sum(col("x")).as("x"))
-        .localCheckpoint(true)
+        .groupBy(col("node")).agg(sum(col("x")).as("x")))
       summed.crossJoin(broadcast(summed.agg(max(col("x")).as("m"))))
         .select(col("node"),
           when(col("m") === 0, lit(0L))
@@ -350,12 +330,9 @@ object Graph {
       hub = halfStep(auth, "a", "dst", "src", "h")
       i += 1
     }
-    val out = auth.join(hub, Seq("node"))
+    auth.join(hub, Seq("node"))
       .select(col("node"), col("a").as("auth_milli"),
         col("h").as("hub_milli"))
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
   }
 
   /** Personalized PageRank, integer parts-per-billion: the teleport
@@ -370,28 +347,25 @@ object Graph {
     * no teleport and no inflow) — exactly the screening signal: a host
     * cluster with ~zero personalized rank has no trusted path into it.
     *
-    * 100 TB posture: identical loop shape to [[pageRankPpb]] — one
-    * |E|-row equi-join + one bounded agg per round; the seed frame is
-    * |S| rows joined once up front.
+    * 100 TB posture: the round loop of [[pageRankPpb]] — one |E|-row
+    * equi-join + one bounded agg per round; the seed frame is |S| rows
+    * joined once up front.
     */
   def personalizedPageRankPpb(edges: DataFrame, src: String, dst: String,
       seeds: DataFrame, node: String,
-      iterations: Int = 3, dampingPct: Int = 85): DataFrame = {
+      iterations: Int = 3, dampingPct: Int = 85): DataFrame = PinScope { pins =>
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be a percentage, got $dampingPct")
     // same e-persist rationale as pageRankPpb: 4 scans of the caller's
     // edge build otherwise
-    val e = edges.select(col(src).cast("long").as("src"),
-      col(dst).cast("long").as("dst")).persist()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("odeg")).persist()
-    val ed = e.join(deg, "src").persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
+    val e = pins.cache(edges.select(col(src).cast("long").as("src"),
+      col(dst).cast("long").as("dst")))
+    val (ed, nodes) = rankInputs(pins, e, count(lit(1)))
     val s0 = seeds.select(col(node).cast("long").as("node")).distinct()
     // teleport: the whole graph's (100-d)% share concentrated on seeds
-    val seeded = nodes.join(s0, Seq("node"), "left_semi").persist()
+    val seeded = pins.cache(nodes.join(s0, Seq("node"), "left_semi"))
     val counts = nodes.agg(count(lit(1)).as("nv"))
       .crossJoin(seeded.agg(count(lit(1)).as("ns"))).first()
     val (nv, ns) = (counts.getLong(0), counts.getLong(1))
@@ -406,74 +380,15 @@ object Graph {
     require(basePpbBig.isValidLong,
       s"per-seed teleport mass overflows Long: nv=$nv ns=$ns")
     val basePpb = basePpbBig.toLong
-    // r17 OPTIMIZATION: same restructure as [[pageRankPpb]] (which
-    // see), adapted to the seed-concentrated teleport. baseFull
-    // (node, b) — b = basePpb on seeds, 0 elsewhere — is built ONCE
-    // and persisted (the old loop re-ran the nodes⋈base LEFT join
-    // every round); each round unions (node, c=0, b) rows into the
-    // contribution aggregation so sum(c) recovers the contribution
-    // mass and sum(b) the teleport term (exactly one baseFull row per
-    // node) — one exchange per round instead of three. The rank side
-    // broadcasts only while the measured |V| fits the session
-    // threshold. Bit-identical integer arithmetic.
-    val sparkS = edges.sparkSession
-    val bcastOk = BroadcastGuard.fits(sparkS, nv, BroadcastGuard.RowBytesNarrow)
-    val baseFull = nodes.join(
-        nodes.join(s0, Seq("node"), "left_semi")
-          .select(col("node"), lit(basePpb).as("b")),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("b"), lit(0L)).as("b"))
-      .persist()
-    var ranks = baseFull.select(col("node"), col("b").as("rank_ppb"))
-    var i = 0
-    while (i < iterations) {
-      val ranked = ranks.withColumnRenamed("node", "src")
-      ranks = ed.join(if (bcastOk) broadcast(ranked) else ranked, "src")
-        .select(col("dst").as("node"), expr("rank_ppb div odeg").as("c"),
-          lit(0L).as("b"))
-        .unionByName(baseFull.select(col("node"), lit(0L).as("c"), col("b")))
-        .groupBy("node").agg(sum(col("c")).as("s"), sum(col("b")).as("b"))
-        .select(col("node"),
-          (col("b") + expr(s"($dampingPct * s) div 100")).as("rank_ppb"))
-        .localCheckpoint(true)
-      i += 1
-    }
-    val out = ranks.localCheckpoint(true)
-    e.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    ed.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    seeded.unpersist(blocking = false)
-    baseFull.unpersist(blocking = false)
-    out
+    // teleport (node, b): b = basePpb on seeds, 0 elsewhere, built once
+    val baseFull = pins.cache(nodes.join(
+        seeded.select(col("node"), lit(basePpb).as("b")), Seq("node"), "left")
+      .select(col("node"), coalesce(col("b"), lit(0L)).as("b")))
+    rankLoop(pins, ed, expr("rank_ppb div norm"), baseFull,
+      baseFull.select(col("node"), col("b").as("rank_ppb")), nv,
+      iterations, dampingPct)
   }
 
-  /** Semi-supervised label propagation with clamped seeds (the label-
-    * spreading shape corpus pipelines use to extend a small labeled
-    * slice — topic, quality tier, spam verdict — over a similarity or
-    * interaction graph). Votes flow src → dst; each round every
-    * unseeded node takes the majority label of its labeled in-
-    * neighbors (count desc, then lexicographically smallest label —
-    * fully deterministic, no scores, no doubles); seed labels never
-    * change. Newly labeled nodes vote in later rounds, so labels
-    * spread one hop per iteration.
-    *
-    * 100 TB posture: same loop skeleton as [[pageRankPpb]] — one
-    * equi-join of the (persisted) edge list against the current
-    * assignment plus one bounded aggregation per round; the assignment
-    * is |V| rows; the driver collects nothing.
-    *
-    * @param seeds (node, label) — the clamped labeled slice
-    * @return (node, label, seeded) for every node reachable within
-    *         `iterations` hops of a seed (unreached nodes are absent)
-    */
-  /** Shared Newman-modularity term spelling, floor-micro: per
-    * community, floor(1e6 · (e_c/m − (d_c/2m)²)). Inputs are exact
-    * integers (within-community edge count, degree sum, edge total),
-    * the doubles ride one spelled-once IEEE expression, and the
-    * community sum is integer addition — the psiTermExprOf contract,
-    * so Q_micro replays bit-for-bit cross-engine.
-    */
   /** Shared CONDUCTANCE spelling, floor-micro: φ(c) = cut(c) /
     * min(vol(c), 2m − vol(c)) with cut = d_c − 2·e_c and vol = d_c —
     * all exact integers into one IEEE division. A community spanning
@@ -487,6 +402,13 @@ object Graph {
       s"CAST(CASE WHEN ($d) < 2 * ($m) - ($d) THEN ($d) " +
       s"ELSE 2 * ($m) - ($d) END AS DOUBLE)) END AS BIGINT)"
 
+  /** Shared Newman-modularity term spelling, floor-micro: per
+    * community, floor(1e6 · (e_c/m − (d_c/2m)²)). Inputs are exact
+    * integers (within-community edge count, degree sum, edge total),
+    * the doubles ride one spelled-once IEEE expression, and the
+    * community sum is integer addition — the psiTermExprOf contract,
+    * so Q_micro replays bit-for-bit cross-engine.
+    */
   def modularityTermExpr(e: String, d: String, m: String): String =
     s"CAST(FLOOR(1000000.0 * (CAST($e AS DOUBLE) / CAST($m AS DOUBLE)" +
       s" - (CAST($d AS DOUBLE) / (2.0 * CAST($m AS DOUBLE)))" +
@@ -538,16 +460,15 @@ object Graph {
       labels, node, label)
 
   private def modularityLoop(edgesW: DataFrame, labels: DataFrame,
-      node: String, label: String): DataFrame = {
-    val e0 = edgesW.persist()
+      node: String, label: String): DataFrame = PinScope { pins =>
+    val e0 = pins.cache(edgesW)
     val lab = labels.select(col(node).cast("long").as("n"),
       col(label).cast("string").as("lbl"))
     val nodes = e0.select(col("a").as("n"))
       .union(e0.select(col("b").as("n"))).distinct()
-    val labeled = nodes.join(lab, Seq("n"), "left")
+    val labeled = pins.cache(nodes.join(lab, Seq("n"), "left")
       .select(col("n"),
-        coalesce(col("lbl"), col("n").cast("string")).as("lbl"))
-      .persist()
+        coalesce(col("lbl"), col("n").cast("string")).as("lbl")))
     // r17 OPTIMIZATION (opt guide §3.1): labeled is |V| rows of
     // (long, short string) joined three times on three different keys
     // (n, a, b) -- each join re-exchanged it and the planner had no
@@ -571,7 +492,7 @@ object Graph {
       .join(lSide(labeled.select(col("n").as("b"), col("lbl").as("lb"))), Seq("b"))
       .filter(col("la") === col("lb"))
       .groupBy(col("la").as("lbl")).agg(sum(col("w")).as("e_within"))
-    val out = dSum.join(eWithin, Seq("lbl"), "left")
+    pins.pin(dSum.join(eWithin, Seq("lbl"), "left")
       .select(col("lbl").as("label"), col("n_nodes"),
         coalesce(col("e_within"), lit(0L)).as("e_within"), col("d_sum"))
       .crossJoin(broadcast(m))
@@ -579,22 +500,37 @@ object Graph {
         expr(modularityTermExpr("e_within", "d_sum", "m")))
       .withColumn("conductance_micro",
         expr(conductanceTermExpr("e_within", "d_sum", "m")))
-      .drop("m")
-      .localCheckpoint(true)
-    e0.unpersist(blocking = false)
-    labeled.unpersist(blocking = false)
-    out
+      .drop("m"))
   }
 
+  /** Semi-supervised label propagation with clamped seeds (the label-
+    * spreading shape corpus pipelines use to extend a small labeled
+    * slice — topic, quality tier, spam verdict — over a similarity or
+    * interaction graph). Votes flow src → dst; each round every
+    * unseeded node takes the majority label of its labeled in-
+    * neighbors (count desc, then lexicographically smallest label —
+    * fully deterministic, no scores, no doubles); seed labels never
+    * change. Newly labeled nodes vote in later rounds, so labels
+    * spread one hop per iteration.
+    *
+    * 100 TB posture: same loop skeleton as [[pageRankPpb]] — one
+    * equi-join of the (persisted) edge list against the current
+    * assignment plus one bounded aggregation per round; the assignment
+    * is |V| rows; the driver collects nothing.
+    *
+    * @param seeds (node, label) — the clamped labeled slice
+    * @return (node, label, seeded) for every node reachable within
+    *         `iterations` hops of a seed (unreached nodes are absent)
+    */
   def labelPropagate(edges: DataFrame, src: String, dst: String,
       seeds: DataFrame, node: String, label: String,
-      iterations: Int = 2): DataFrame = {
+      iterations: Int = 2): DataFrame = PinScope { pins =>
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
-    val e = edges.select(col(src).cast("long").as("src"),
-      col(dst).cast("long").as("dst")).persist()
-    val s0 = seeds.select(col(node).cast("long").as("node"),
-      col(label).cast("string").as("label")).distinct().persist()
+    val e = pins.cache(edges.select(col(src).cast("long").as("src"),
+      col(dst).cast("long").as("dst")))
+    val s0 = pins.cache(seeds.select(col(node).cast("long").as("node"),
+      col(label).cast("string").as("label")).distinct())
     // r17 kept, r18 trimmed (opt guide §2.4, §3.1): the window argmax is
     // min(struct(-n_votes, label)) — same winner (count desc, then
     // lexicographically smallest label) through the aggregation itself,
@@ -624,10 +560,7 @@ object Graph {
         .unionByName(winners.join(s0.select("node"), Seq("node"), "left_anti"))
       i += 1
     }
-    val out = assigned.localCheckpoint(true)
-    e.unpersist(blocking = false)
-    s0.unpersist(blocking = false)
-    out
+    pins.pin(assigned)
   }
 
   /** k-core peeling — the link-farm / spam-cluster screen (a dense
@@ -652,34 +585,17 @@ object Graph {
     *         their degree in the peeled graph
     */
   def kCorePeel(edges: DataFrame, src: String, dst: String,
-      k: Int, rounds: Int = 3, maxFixpointRounds: Int = 1000): DataFrame = {
+      k: Int, rounds: Int = 3,
+      maxFixpointRounds: Int = 1000): DataFrame = PinScope { pins =>
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds == -1 || (rounds >= 1 && rounds <= 50),
       s"rounds must be in [1, 50] or -1 (peel to fixpoint), got $rounds")
     require(maxFixpointRounds >= 1,
       s"maxFixpointRounds must be >= 1, got $maxFixpointRounds")
-    // rounds >= 1 peels a FIXED depth (gate-friendly, oracle unrolls
-    // exactly — but an approximation of the true core); rounds = -1
-    // iterates until the surviving edge count stops changing, which IS
-    // the k-core. Convergence needs at most |V| rounds (each non-final
-    // round removes >= 1 node); the loop already materializes a
-    // count() per round, so the fixpoint test is free. EVERY round
-    // cuts lineage with an eager localCheckpoint, NOT persist: persist
-    // caches execution but the LOGICAL plan still nests — each round
-    // references the previous round's plan 3× (the edge frame plus the
-    // two semi-join sides), so an unbounded loop grows the tree 3^i
-    // and Catalyst analysis hangs long before execution does (hit at
-    // ~12 rounds). The checkpoint also WINS on wall clock even at
-    // bounded depth: later rounds and the final degree aggregation
-    // read materialized blocks instead of re-traversing the nested
-    // chain — measured 2× at 100× edges, ~12% at sf0.1 (PLANS.md
-    // round-9 k-core stress table). Results are unchanged either way.
-    val fixpoint = rounds == -1
     val sym = edges.select(col(src).cast("long").as("src"),
         col(dst).cast("long").as("dst"))
-    var e = sym.union(sym.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct().persist()
-    var prevCount = if (fixpoint) e.count() else -1L
+    val e0 = pins.cache(sym.union(sym.select(col("dst").as("src"), col("src").as("dst")))
+      .filter(col("src") =!= col("dst")).distinct())
     // r17 OPTIMIZATION (opt guide §2.4, §3.1): the keep set is derived
     // from an aggregation over a checkpointed edge list, so it carries
     // no stats and the planner defaulted both per-round semi-joins to
@@ -690,77 +606,64 @@ object Graph {
     // broadcast threshold, broadcast both semi-joins and the edge list
     // is never reshuffled. Past the threshold the shuffled plan is
     // kept unchanged. Identical surviving set either way.
-    val sparkS = edges.sparkSession
-    val nV = e.select(col("src")).distinct().count()
-    val bcastOk = BroadcastGuard.fits(sparkS, nV, BroadcastGuard.RowBytesNarrow)
-    var i = 0
-    var stable = false
-    while (if (fixpoint) !stable else i < rounds) {
-      // Safety cap for fixpoint mode: a pathological long-chain graph
-      // converges only after O(|V|) rounds, each an eager
-      // materialization. Abort loudly instead of looping unbounded.
-      if (fixpoint && i >= maxFixpointRounds)
-        throw new IllegalStateException(
-          s"kCorePeel fixpoint did not converge within $maxFixpointRounds " +
-            s"rounds (surviving edges: $prevCount); raise maxFixpointRounds " +
-            "if the graph genuinely needs more peels")
+    val nV = e0.select(col("src")).distinct().count()
+    val bcastOk = BroadcastGuard.fits(edges.sparkSession, nV,
+      BroadcastGuard.RowBytesNarrow)
+    val core = peel(pins, "kCorePeel", e0, e0.count(), rounds,
+        maxFixpointRounds) { e =>
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("c"))
         .filter(col("c") >= k).select(col("src").as("node"))
       def keepSide(as: String) = {
         val r = keep.withColumnRenamed("node", as)
         if (bcastOk) broadcast(r) else r
       }
-      val peeled = e
-        .join(keepSide("src"), Seq("src"), "left_semi")
+      e.join(keepSide("src"), Seq("src"), "left_semi")
         .join(keepSide("dst"), Seq("dst"), "left_semi")
-      val next = peeled.localCheckpoint(true)
-      // r17: the redundant per-round count() is gone for fixed-depth
-      // mode — localCheckpoint(true) is already the materialization
-      // barrier; fixpoint mode still counts (it IS the convergence test)
-      if (fixpoint) { val n = next.count(); stable = n == prevCount; prevCount = n }
-      e.unpersist(blocking = false)
-      e = next
-      i += 1
     }
-    val out = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true)
-    e.unpersist(blocking = false)
-    out
+    pins.pin(core.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree")))
   }
 
-  /** Exact triangle census with per-node counts and local clustering
-    * coefficient (the link-farm / community-density signal: organic
-    * neighborhoods close triangles, spam link rings and scraped
-    * mirror-nets show extreme coefficients in either direction).
+  /** The peel control shared by [[kCorePeel]] and [[kTruss]]: applies
+    * `step` to the edge frame `e0` for `rounds` rounds, or, at
+    * `rounds = -1`, until the surviving edge count stops changing (the
+    * exact fixpoint; `n0` is |e0|, read only then). Convergence needs
+    * at most |V| rounds for a k-core and |E| for a k-truss (each
+    * non-final round removes at least one node or edge); the per-round
+    * count is the fixpoint test, and a graph still shrinking after
+    * `maxFixpointRounds` rounds aborts loudly instead of looping on.
     *
-    * Algorithm: degree-ordered edge orientation (the classic
-    * compact-forward / Cohen MapReduce formulation). Every undirected
-    * edge is oriented from its lower-rank endpoint to its higher-rank
-    * endpoint under the total order rank(v) = (deg(v), v); each
-    * triangle then has exactly ONE vertex with two out-edges, so the
-    * wedge self-join emits each triangle once and no dedup pass is
-    * needed. The orientation is also the scale guarantee: out-degree
-    * under the degree order is O(sqrt(|E|)) even on power-law graphs,
-    * so the wedge join's fan-out is bounded — the naive formulation
-    * (join on every shared endpoint) is quadratic in the max hub
-    * degree and melts on exactly the graphs this op screens.
-    *
-    * Everything is 64-bit integer arithmetic; the clustering
-    * coefficient is emitted in floor basis points
-    * (`cc_bp = 20000·T(v) div (deg·(deg−1))`, i.e. 2T/(deg choose 2)
-    * scaled to 1e4) so the result is bit-identical in any engine.
-    *
-    * 100 TB posture: two equi-joins over the oriented edge list (one
-    * u-keyed self-join, one (x,y)-keyed closing join) plus bounded
-    * per-node aggregations; shuffled rows carry 2–3 longs; the driver
-    * collects nothing. Input normalization (self-loop drop, undirected
-    * dedup) costs one distinct.
-    *
-    * @param edges edge list, either orientation, duplicates/self-loops
-    *              tolerated (normalized away)
-    * @return (node, deg, triangles, cc_bp) for every node in the
-    *         normalized graph; cc_bp null when deg < 2
+    * EVERY round cuts lineage with an eager pin, NOT persist: persist
+    * caches execution but the LOGICAL plan still nests — a k-core round
+    * references the previous round's plan 3× (the edge frame plus the
+    * two semi-join sides), so an unbounded loop grows the tree 3^i and
+    * Catalyst analysis hangs long before execution does (hit at ~12
+    * rounds). The pin also WINS on wall clock even at bounded depth:
+    * later rounds and the final aggregation read materialized blocks
+    * instead of re-traversing the nested chain — measured 2× at 100×
+    * edges, ~12% at sf0.1 (PLANS.md round-9 k-core stress table). In
+    * fixed-depth mode the pin is the round's only materialization.
     */
+  private def peel(pins: PinScope, op: String, e0: DataFrame, n0: => Long,
+      rounds: Int, maxFixpointRounds: Int)(
+      step: DataFrame => DataFrame): DataFrame = {
+    val fixpoint = rounds == -1
+    var e = e0
+    var prevCount = if (fixpoint) n0 else -1L
+    var i = 0
+    var stable = false
+    while (if (fixpoint) !stable else i < rounds) {
+      if (fixpoint && i >= maxFixpointRounds)
+        throw new IllegalStateException(
+          s"$op fixpoint did not converge within $maxFixpointRounds " +
+            s"rounds (surviving edges: $prevCount); raise maxFixpointRounds " +
+            "if the graph genuinely needs more peels")
+      e = pins.pin(step(e))
+      if (fixpoint) { val n = e.count(); stable = n == prevCount; prevCount = n }
+      i += 1
+    }
+    e
+  }
+
   /** Capped weighted bipartite projection — collapse a (basket, item)
     * incidence table into an item–item co-occurrence graph: one edge
     * per unordered item pair sharing a basket, weighted by the number
@@ -802,18 +705,52 @@ object Graph {
       .agg(count(lit(1)).as("w"))
   }
 
-  def triangleCount(edges: DataFrame, src: String, dst: String): DataFrame = {
+  /** Exact triangle census with per-node counts and local clustering
+    * coefficient (the link-farm / community-density signal: organic
+    * neighborhoods close triangles, spam link rings and scraped
+    * mirror-nets show extreme coefficients in either direction).
+    *
+    * Algorithm: degree-ordered edge orientation (the classic
+    * compact-forward / Cohen MapReduce formulation). Every undirected
+    * edge is oriented from its lower-rank endpoint to its higher-rank
+    * endpoint under the total order rank(v) = (deg(v), v); each
+    * triangle then has exactly ONE vertex with two out-edges, so the
+    * wedge self-join emits each triangle once and no dedup pass is
+    * needed. The orientation is also the scale guarantee: out-degree
+    * under the degree order is O(sqrt(|E|)) even on power-law graphs,
+    * so the wedge join's fan-out is bounded — the naive formulation
+    * (join on every shared endpoint) is quadratic in the max hub
+    * degree and melts on exactly the graphs this op screens.
+    *
+    * Everything is 64-bit integer arithmetic; the clustering
+    * coefficient is emitted in floor basis points
+    * (`cc_bp = 20000·T(v) div (deg·(deg−1))`, i.e. 2T/(deg choose 2)
+    * scaled to 1e4) so the result is bit-identical in any engine.
+    *
+    * 100 TB posture: two equi-joins over the oriented edge list (one
+    * u-keyed self-join, one (x,y)-keyed closing join) plus bounded
+    * per-node aggregations; shuffled rows carry 2–3 longs; the driver
+    * collects nothing. Input normalization (self-loop drop, undirected
+    * dedup) costs one distinct.
+    *
+    * @param edges edge list, either orientation, duplicates/self-loops
+    *              tolerated (normalized away)
+    * @return (node, deg, triangles, cc_bp) for every node in the
+    *         normalized graph; cc_bp null when deg < 2
+    */
+  def triangleCount(edges: DataFrame, src: String,
+      dst: String): DataFrame = PinScope { pins =>
     val e0 = edges.select(col(src).cast("long").as("a"),
         col(dst).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct()
-    val deg = e0.select(explode(array(col("a"), col("b"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg")).persist()
+    val deg = pins.cache(e0.select(explode(array(col("a"), col("b"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
     // orient low-rank → high-rank, rank = (deg, node); carry the head's
     // degree so the wedge filter below needs no extra join
-    val oriented = e0
+    val oriented = pins.cache(e0
       .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
       .select(when(col("da") < col("db") ||
@@ -821,8 +758,7 @@ object Graph {
         struct(col("a").as("u"), col("b").as("v"), col("db").as("dv")))
         .otherwise(struct(col("b").as("u"), col("a").as("v"),
           col("da").as("dv"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv"))
-      .persist()
+      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv")))
     // wedges (x, y) around pivot u with rank(x) < rank(y): the closing
     // edge of pair {x, y}, if present, is oriented exactly x → y
     val wedges = oriented.select(col("u"), col("v").as("x"), col("dv").as("dx"))
@@ -835,15 +771,11 @@ object Graph {
     val perNode = tris
       .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
-    val out = deg.join(perNode, Seq("node"), "left")
+    pins.pin(deg.join(perNode, Seq("node"), "left")
       .select(col("node"), col("deg"),
         coalesce(col("triangles"), lit(0L)).as("triangles"))
       .withColumn("cc_bp", when(col("deg") >= 2,
-        expr("(20000 * triangles) div (deg * (deg - 1))")))
-      .localCheckpoint(true)
-    deg.unpersist(blocking = false)
-    oriented.unpersist(blocking = false)
-    out
+        expr("(20000 * triangles) div (deg * (deg - 1))"))))
   }
 
   /** Link prediction scores for non-adjacent node pairs: common-
@@ -884,19 +816,18 @@ object Graph {
     */
   def linkPredict(edges: DataFrame, src: String, dst: String,
       maxPivotDeg: Int = 1000, minCommon: Int = 2,
-      numParts: Int = -1): DataFrame = {
+      numParts: Int = -1): DataFrame = PinScope { pins =>
     require(maxPivotDeg >= 2, s"maxPivotDeg must be >= 2, got $maxPivotDeg")
     require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
-    val e0 = edges.select(col(src).cast("long").as("a"),
+    val e0 = pins.cache(edges.select(col(src).cast("long").as("a"),
         col(dst).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .persist()
+      .distinct())
     val adj = e0.select(col("a").as("u"), col("b").as("v"))
       .union(e0.select(col("b").as("u"), col("a").as("v")))
-    val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
+    val deg = pins.cache(adj.groupBy(col("u")).agg(count(lit(1)).as("deg")))
     val parts =
       if (numParts >= 0) numParts
       else {
@@ -918,13 +849,9 @@ object Graph {
       .groupBy(col("x"), col("y"))
       .agg(count(lit(1)).as("cn"), sum(expr(aaGainExpr)).as("aa_nano"))
       .filter(col("cn") >= minCommon)
-    val out = scores.join(
-        e0.select(col("a").as("x"), col("b").as("y")),
-        Seq("x", "y"), "left_anti")
-      .localCheckpoint(true)
-    e0.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    out
+    pins.pin(scores.join(
+      e0.select(col("a").as("x"), col("b").as("y")),
+      Seq("x", "y"), "left_anti"))
   }
 
   /** Floor-nano Adamic–Adar gain of one shared neighbor of degree
@@ -981,16 +908,15 @@ object Graph {
     *         assortativity_micro)
     */
   def assortativityMicro(edges: DataFrame, src: String,
-      dst: String): DataFrame = {
-    val e0 = edges.select(
+      dst: String): DataFrame = PinScope { pins =>
+    val e0 = pins.cache(edges.select(
         least(col(src).cast("long"), col(dst).cast("long")).as("a"),
         greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
       .filter(col("a") =!= col("b") && col("a").isNotNull)
-      .distinct().persist()
-    val deg = e0.select(col("a").as("n"))
+      .distinct())
+    val deg = pins.cache(e0.select(col("a").as("n"))
       .union(e0.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
-      .persist()
+      .groupBy(col("n")).agg(count(lit(1)).as("d")))
     val moments = deg.agg(count(lit(1)).as("n_nodes"),
       sum(col("d")).as("s1"),
       sum(col("d") * col("d")).as("s2"),
@@ -1000,15 +926,11 @@ object Graph {
       .join(deg.select(col("n").as("b"), col("d").as("db")), Seq("b"))
       .agg(count(lit(1)).as("n_edges"),
         (sum(col("da") * col("db")) * 2).as("se"))
-    val out = moments.crossJoin(broadcast(se))
+    pins.pin(moments.crossJoin(broadcast(se))
       .withColumn("assortativity_micro",
         expr(assortativityExpr("s1", "s2", "s3", "se")))
       .select(col("n_nodes"), col("n_edges"), col("s1"), col("s2"),
-        col("s3"), col("se"), col("assortativity_micro"))
-      .localCheckpoint(true)
-    e0.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    out
+        col("s3"), col("se"), col("assortativity_micro")))
   }
 
   /** Bounded-depth harmonic centrality — THE crawl-ranking metric:
@@ -1042,63 +964,75 @@ object Graph {
     *         nodes within maxDepth (excluding the node itself)
     */
   def harmonicCentralityMicro(edges: DataFrame, src: String, dst: String,
-      maxDepth: Int = 3, directed: Boolean = false): DataFrame = {
+      maxDepth: Int = 3, directed: Boolean = false): DataFrame = PinScope { pins =>
+    val (start, levels) = bfsLevels(pins, edges, src, dst, maxDepth, directed)
+    var acc = start.select(col("v"), lit(0L).as("h"), lit(0L).as("n"))
+    for (((next, _), i) <- levels.zipWithIndex) {
+      val w = 1000000L / (i + 1)
+      acc = acc.unionByName(next.groupBy(col("v"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("v"), (col("n") * w).as("h"), col("n")))
+    }
+    pins.pin(acc.groupBy(col("v").as("node"))
+      .agg(sum(col("h")).as("harmonic_micro"), sum(col("n")).as("n_reached")))
+  }
+
+  /** The simultaneous BFS behind [[harmonicCentralityMicro]] and
+    * [[neighborhoodFunctionExact]], over IN-edges (symmetrized unless
+    * `directed`): level d holds the (v, u) pairs with u at exact
+    * distance d from v. Returns level 0 (every node paired with
+    * itself) and the non-empty levels 1..maxDepth with their row
+    * counts; the walk stops at the first empty level.
+    *
+    * Each level is pinned once; `reached` is the cheap union of those
+    * already-materialized frames (≤ maxDepth deep) — a per-round
+    * re-pin of `reached` would rewrite the whole accumulated pair set
+    * every round, tripling the materialized bytes (measured 11 s →
+    * 6.5 s on the sf0.1 part graph).
+    */
+  private def bfsLevels(pins: PinScope, edges: DataFrame, src: String,
+      dst: String, maxDepth: Int, directed: Boolean)
+      : (DataFrame, Seq[(DataFrame, Long)]) = {
     require(maxDepth >= 1 && maxDepth <= 10,
       s"maxDepth must be in [1, 10], got $maxDepth")
     val e0 = edges.select(col(src).cast("long").as("esrc"),
         col(dst).cast("long").as("edst"))
       .filter(col("esrc") =!= col("edst"))
-    val e = (if (directed) e0
+    val e = pins.cache((if (directed) e0
              else e0.union(e0.select(col("edst").as("esrc"), col("esrc").as("edst"))))
-      .distinct().persist()
-    val nodes = e.select(col("esrc").as("node"))
-      .union(e.select(col("edst").as("node"))).distinct().persist()
-    // reached / frontier hold (v, u) pairs: u is within d hops of v.
-    // Each FRONTIER is checkpointed once; `reached` is the cheap union
-    // of those already-materialized RDD frames (≤ maxDepth deep) — a
-    // per-round re-checkpoint of `reached` would rewrite the whole
-    // accumulated pair set every round, tripling the materialized
-    // bytes (measured 11 s → 6.5 s on the sf0.1 part graph).
-    var frontier = nodes.select(col("node").as("v"), col("node").as("u"))
-      .localCheckpoint(true)
-    var reached = frontier
-    // r17 OPTIMIZATION (opt guide §3.1): the frontier is checkpointed
-    // (no stats), so the per-round expansion join defaulted to a
+      .distinct())
+    val start = pins.pin(e.select(col("esrc").as("node"))
+      .union(e.select(col("edst").as("node"))).distinct()
+      .select(col("node").as("v"), col("node").as("u")))
+    // r17 OPTIMIZATION (opt guide §3.1): the frontier is pinned (no
+    // stats), so the per-round expansion join defaulted to a
     // sort-merge that reshuffled and re-sorted BOTH the pair frontier
     // and the edge list every round. The edge list is the bounded side
     // here (the pair set is Σ|ball| ≥ |E| on dense fixtures); measure
-    // |E| once (the frame is persisted, the count is amortized over
+    // |E| once (the frame is cached, the count is amortized over
     // maxDepth rounds) and broadcast it while it fits the session
     // threshold — the frontier then never reshuffles for the
     // expansion. Past the threshold the shuffled plan is unchanged.
-    val sparkS = edges.sparkSession
-    val bcastE = BroadcastGuard.fits(sparkS, e.count(), BroadcastGuard.RowBytesNarrow)
-    var acc = nodes.select(col("node").as("v"), lit(0L).as("h"), lit(0L).as("n"))
-    var d = 1
+    val bcastE = BroadcastGuard.fits(edges.sparkSession, e.count(),
+      BroadcastGuard.RowBytesNarrow)
+    val levels = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, Long)]
+    var frontier = start
+    var reached = start
     var emptied = false
-    while (d <= maxDepth && !emptied) {
+    while (levels.size < maxDepth && !emptied) {
       val expanded = frontier.join(if (bcastE) broadcast(e) else e,
           frontier("u") === e("edst"))
         .select(col("v"), col("esrc").as("u")).distinct()
-      val next = expanded.join(reached, Seq("v", "u"), "left_anti")
-        .localCheckpoint(true)
-      if (next.count() == 0L) emptied = true
+      val next = pins.pin(expanded.join(reached, Seq("v", "u"), "left_anti"))
+      val n = next.count()
+      if (n == 0L) emptied = true
       else {
-        val w = 1000000L / d
-        acc = acc.unionByName(next.groupBy(col("v"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("v"), (col("n") * w).as("h"), col("n")))
+        levels += ((next, n))
         reached = reached.union(next)
         frontier = next
       }
-      d += 1
     }
-    val out = acc.groupBy(col("v").as("node"))
-      .agg(sum(col("h")).as("harmonic_micro"), sum(col("n")).as("n_reached"))
-      .localCheckpoint(true)
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
+    (start, levels.toSeq)
   }
 
   // --- HyperBall tier (NEW r10) --------------------------------------
@@ -1170,6 +1104,85 @@ object Graph {
     math.round(est)
   }
 
+  /** Exact neighborhood function N(d) = Σ_v |ball_d(v)| (the number of
+    * node pairs within distance d, self included) — same simultaneous-
+    * BFS skeleton as [[harmonicCentralityMicro]] but only the per-depth
+    * GLOBAL totals leave the loop, so the result is maxDepth+1 rows.
+    * The classic derived statistic is the EFFECTIVE DIAMETER (smallest
+    * d where N(d) reaches q% of N(maxDepth), linearly interpolated —
+    * Boldi–Vigna's "four degrees of separation" number), computed by
+    * [[effectiveDiameterMicro]] on this output in exact floor-micro
+    * integers.
+    *
+    * Same scale caveat as the exact harmonic op: the pair set is
+    * quadratic on dense graphs — [[neighborhoodFunctionHyperBall]] is
+    * the sketch tier with per-round cost |E|·2^p instead.
+    *
+    * @return (d, n_pairs) for d = 0..maxDepth, n_pairs exact
+    */
+  def neighborhoodFunctionExact(edges: DataFrame, src: String, dst: String,
+      maxDepth: Int = 3, directed: Boolean = false): DataFrame = PinScope { pins =>
+    val (start, levels) = bfsLevels(pins, edges, src, dst, maxDepth, directed)
+    val totals = levels.scanLeft(start.count())(_ + _._2)
+    val s = edges.sparkSession
+    import s.implicits._
+    totals.padTo(maxDepth + 1, totals.last).zipWithIndex.map(_.swap)
+      .toDF("d", "n_pairs")
+  }
+
+  /** Sketch-tier neighborhood function: the same HyperBall loop as
+    * [[harmonicCentralityHyperBall]], emitting the per-depth GLOBAL
+    * Σ_v est|ball_d(v)| instead of per-node centralities. Per-round
+    * cost is |E|·2^p — independent of ball mass — which is exactly how
+    * the web-scale "degrees of separation" numbers are produced.
+    * Deterministic for the same reasons (fixed hash, integer
+    * registers, StrictMath estimate); global sums concentrate, so the
+    * relative error is far below the per-node HLL bound.
+    *
+    * @return (d, n_pairs_est) for d = 0..maxDepth
+    */
+  def neighborhoodFunctionHyperBall(edges: DataFrame, src: String,
+      dst: String, maxDepth: Int = 3, directed: Boolean = false,
+      p: Int = 10): DataFrame = PinScope { pins =>
+    val (_, sums) = hyperBallLoop(pins, edges, src, dst, maxDepth,
+      directed, p, collectSums = true)
+    val s = edges.sparkSession
+    import s.implicits._
+    sums.toDF("d", "n_pairs_est")
+  }
+
+  /** Effective diameter at `qBp` basis points (e.g. 9000 = 90%) from a
+    * neighborhood-function frame `(d, n_pairs[...])`: the smallest d
+    * with N(d) >= target, linearly interpolated inside the step in
+    * exact floor-micro integers — deterministic in any 64-bit engine.
+    * One tiny (maxDepth+1)-row computation; `valueCol` selects the
+    * exact or estimated count column.
+    */
+  def effectiveDiameterMicro(nf: DataFrame, valueCol: String,
+      qBp: Int = 9000): DataFrame = {
+    require(qBp >= 1 && qBp <= 10000, s"qBp must be in [1, 10000], got $qBp")
+    val last = nf.agg(max(col("d")).as("dmax"))
+    val tgt = nf.join(broadcast(last), col("d") === col("dmax"))
+      .select((col(valueCol) * qBp).as("target_x10k"))
+    val w = Window.orderBy(col("d"))
+    val steps = nf.select(col("d"), col(valueCol).as("n"))
+      .withColumn("n_prev", lag(col("n"), 1).over(w))
+      .crossJoin(broadcast(tgt))
+      .filter(col("n") * 10000 >= col("target_x10k") &&
+        (col("n_prev").isNull || col("n_prev") * 10000 < col("target_x10k")))
+    // floor-integer interpolation (div, not /): exact in any 64-bit
+    // engine. (delta·1e6) div (step·1e4) == (delta·100) div step — the
+    // common factor 1e4 cancels exactly under floor division — and the
+    // reduced form bounds the product at delta·100 ≤ step·1e6, so the
+    // first overflow is at a per-depth pair-count STEP of ~9.2e12
+    // (trillions of new pairs in one depth), not the ~9.2e8 the
+    // unreduced multiply allowed
+    steps.selectExpr(
+      "CAST(CASE WHEN n_prev IS NULL THEN 0 ELSE " +
+        "(d - 1) * 1000000 + ((target_x10k - n_prev * 10000) * 100)" +
+        " div (n - n_prev) END AS BIGINT) AS eff_diameter_micro")
+  }
+
   /** HyperBall harmonic centrality (Boldi–Vigna 2013) — the WEB-SCALE
     * tier of [[harmonicCentralityMicro]], and how Common Crawl actually
     * produces its published host rankings. The exact op's (v, u) pair
@@ -1209,124 +1222,11 @@ object Graph {
     * @param p log2 of the register count (4..14); m = 2^p bytes/node
     * @return (node, harmonic_est_micro, n_reached_est)
     */
-  /** Exact neighborhood function N(d) = Σ_v |ball_d(v)| (the number of
-    * node pairs within distance d, self included) — same simultaneous-
-    * BFS skeleton as [[harmonicCentralityMicro]] but only the per-depth
-    * GLOBAL totals leave the loop, so the result is maxDepth+1 rows.
-    * The classic derived statistic is the EFFECTIVE DIAMETER (smallest
-    * d where N(d) reaches q% of N(maxDepth), linearly interpolated —
-    * Boldi–Vigna's "four degrees of separation" number), computed by
-    * [[effectiveDiameterMicro]] on this output in exact floor-micro
-    * integers.
-    *
-    * Same scale caveat as the exact harmonic op: the pair set is
-    * quadratic on dense graphs — [[neighborhoodFunctionHyperBall]] is
-    * the sketch tier with per-round cost |E|·2^p instead.
-    *
-    * @return (d, n_pairs) for d = 0..maxDepth, n_pairs exact
-    */
-  def neighborhoodFunctionExact(edges: DataFrame, src: String, dst: String,
-      maxDepth: Int = 3, directed: Boolean = false): DataFrame = {
-    require(maxDepth >= 1 && maxDepth <= 10,
-      s"maxDepth must be in [1, 10], got $maxDepth")
-    val e0 = edges.select(col(src).cast("long").as("esrc"),
-        col(dst).cast("long").as("edst"))
-      .filter(col("esrc") =!= col("edst"))
-    val e = (if (directed) e0
-             else e0.union(e0.select(col("edst").as("esrc"), col("esrc").as("edst"))))
-      .distinct().persist()
-    val nodes = e.select(col("esrc").as("node"))
-      .union(e.select(col("edst").as("node"))).distinct().persist()
-    var frontier = nodes.select(col("node").as("v"), col("node").as("u"))
-      .localCheckpoint(true)
-    var reached = frontier
-    var total = frontier.count()
-    val counts = scala.collection.mutable.ArrayBuffer((0, total))
-    var d = 1
-    var emptied = false
-    while (d <= maxDepth && !emptied) {
-      val expanded = frontier.join(e, frontier("u") === e("edst"))
-        .select(col("v"), col("esrc").as("u")).distinct()
-      val next = expanded.join(reached, Seq("v", "u"), "left_anti")
-        .localCheckpoint(true)
-      val n = next.count()
-      if (n == 0L) emptied = true
-      else {
-        total += n
-        reached = reached.union(next)
-        frontier = next
-      }
-      counts += ((d, total))
-      d += 1
-    }
-    while (d <= maxDepth) { counts += ((d, total)); d += 1 }
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    val s = edges.sparkSession
-    import s.implicits._
-    counts.toSeq.toDF("d", "n_pairs")
-  }
-
-  /** Sketch-tier neighborhood function: the same HyperBall loop as
-    * [[harmonicCentralityHyperBall]], emitting the per-depth GLOBAL
-    * Σ_v est|ball_d(v)| instead of per-node centralities. Per-round
-    * cost is |E|·2^p — independent of ball mass — which is exactly how
-    * the web-scale "degrees of separation" numbers are produced.
-    * Deterministic for the same reasons (fixed hash, integer
-    * registers, StrictMath estimate); global sums concentrate, so the
-    * relative error is far below the per-node HLL bound.
-    *
-    * @return (d, n_pairs_est) for d = 0..maxDepth
-    */
-  def neighborhoodFunctionHyperBall(edges: DataFrame, src: String,
-      dst: String, maxDepth: Int = 3, directed: Boolean = false,
-      p: Int = 10): DataFrame = {
-    require(maxDepth >= 1 && maxDepth <= 10,
-      s"maxDepth must be in [1, 10], got $maxDepth")
-    require(p >= 4 && p <= 14, s"p must be in [4, 14], got $p")
-    val (_, sums) = hyperBallLoop(edges, src, dst, maxDepth, directed, p,
-      collectSums = true)
-    val s = edges.sparkSession
-    import s.implicits._
-    sums.toDF("d", "n_pairs_est")
-  }
-
-  /** Effective diameter at `qBp` basis points (e.g. 9000 = 90%) from a
-    * neighborhood-function frame `(d, n_pairs[...])`: the smallest d
-    * with N(d) >= target, linearly interpolated inside the step in
-    * exact floor-micro integers — deterministic in any 64-bit engine.
-    * One tiny (maxDepth+1)-row computation; `valueCol` selects the
-    * exact or estimated count column.
-    */
-  def effectiveDiameterMicro(nf: DataFrame, valueCol: String,
-      qBp: Int = 9000): DataFrame = {
-    require(qBp >= 1 && qBp <= 10000, s"qBp must be in [1, 10000], got $qBp")
-    val last = nf.agg(max(col("d")).as("dmax"))
-    val tgt = nf.join(broadcast(last), col("d") === col("dmax"))
-      .select((col(valueCol) * qBp).as("target_x10k"))
-    val w = Window.orderBy(col("d"))
-    val steps = nf.select(col("d"), col(valueCol).as("n"))
-      .withColumn("n_prev", lag(col("n"), 1).over(w))
-      .crossJoin(broadcast(tgt))
-      .filter(col("n") * 10000 >= col("target_x10k") &&
-        (col("n_prev").isNull || col("n_prev") * 10000 < col("target_x10k")))
-    // floor-integer interpolation (div, not /): exact in any 64-bit
-    // engine. (delta·1e6) div (step·1e4) == (delta·100) div step — the
-    // common factor 1e4 cancels exactly under floor division — and the
-    // reduced form bounds the product at delta·100 ≤ step·1e6, so the
-    // first overflow is at a per-depth pair-count STEP of ~9.2e12
-    // (trillions of new pairs in one depth), not the ~9.2e8 the
-    // unreduced multiply allowed
-    steps.selectExpr(
-      "CAST(CASE WHEN n_prev IS NULL THEN 0 ELSE " +
-        "(d - 1) * 1000000 + ((target_x10k - n_prev * 10000) * 100)" +
-        " div (n - n_prev) END AS BIGINT) AS eff_diameter_micro")
-  }
-
   def harmonicCentralityHyperBall(edges: DataFrame, src: String, dst: String,
-      maxDepth: Int = 3, directed: Boolean = false, p: Int = 10): DataFrame = {
-    val (state, _) = hyperBallLoop(edges, src, dst, maxDepth, directed, p,
-      collectSums = false)
+      maxDepth: Int = 3, directed: Boolean = false,
+      p: Int = 10): DataFrame = PinScope { pins =>
+    val (state, _) = hyperBallLoop(pins, edges, src, dst, maxDepth,
+      directed, p, collectSums = false)
     state.select(col("node"),
       col("h_micro").as("harmonic_est_micro"),
       (col("est") - 1L).as("n_reached_est"))
@@ -1339,8 +1239,8 @@ object Graph {
     * per-depth global Σ est (one bounded 1-row action per round; the
     * harmonic path skips them).
     */
-  private def hyperBallLoop(edges: DataFrame, src: String, dst: String,
-      maxDepth: Int, directed: Boolean, p: Int,
+  private def hyperBallLoop(pins: PinScope, edges: DataFrame, src: String,
+      dst: String, maxDepth: Int, directed: Boolean, p: Int,
       collectSums: Boolean): (DataFrame, Seq[(Int, Long)]) = {
     require(maxDepth >= 1 && maxDepth <= 10,
       s"maxDepth must be in [1, 10], got $maxDepth")
@@ -1349,9 +1249,9 @@ object Graph {
     val e0 = edges.select(col(src).cast("long").as("esrc"),
         col(dst).cast("long").as("edst"))
       .filter(col("esrc") =!= col("edst"))
-    val e = (if (directed) e0
+    val e = pins.cache((if (directed) e0
              else e0.union(e0.select(col("edst").as("esrc"), col("esrc").as("edst"))))
-      .distinct().persist()
+      .distinct())
     val initUdf = udf { (node: Long) =>
       val h = splitmix64(node)
       val idx = (h >>> (64 - p)).toInt
@@ -1365,11 +1265,10 @@ object Graph {
     val regMax = udaf(new RegMax(m))
     // state: one row per node — registers + monotone ball estimate +
     // accumulated harmonic sum. ball_0 = {v} is exact by construction.
-    var state = e.select(col("esrc").as("node"))
+    var state = pins.pin(e.select(col("esrc").as("node"))
       .union(e.select(col("edst").as("node"))).distinct()
       .select(col("node"), initUdf(col("node")).as("regs"),
-        lit(1L).as("est"), lit(0L).as("h_micro"))
-      .localCheckpoint(true)
+        lit(1L).as("est"), lit(0L).as("h_micro")))
     // r17 OPTIMIZATION (opt guide §3.1): state rows carry 2^p-byte
     // register arrays, so reshuffling + sorting the state frame for a
     // sort-merge contribution join every round is the worst possible
@@ -1398,18 +1297,16 @@ object Graph {
         .select(col("edst").as("node"), col("regs"),
           lit(0L).as("est"), lit(0L).as("h_micro"))
       val w = 1000000L / d
-      state = contrib.unionByName(state)
+      state = pins.pin(contrib.unionByName(state)
         .groupBy(col("node"))
         .agg(regMax(col("regs")).as("regs"),
           max(col("est")).as("est0"), max(col("h_micro")).as("h0"))
         .withColumn("est", greatest(estUdf(col("regs")), col("est0")))
         .select(col("node"), col("regs"), col("est"),
-          (col("h0") + (col("est") - col("est0")) * w).as("h_micro"))
-        .localCheckpoint(true)
+          (col("h0") + (col("est") - col("est0")) * w).as("h_micro")))
       sumEst(d)
       d += 1
     }
-    e.unpersist(blocking = false)
     (state, sums.toSeq)
   }
 
@@ -1520,20 +1417,19 @@ object Graph {
     * @return (src, dst, support) per surviving canonical edge
     */
   def kTruss(edges: DataFrame, src: String, dst: String, k: Int,
-      rounds: Int = 2, maxFixpointRounds: Int = 1000): DataFrame = {
+      rounds: Int = 2,
+      maxFixpointRounds: Int = 1000): DataFrame = PinScope { pins =>
     require(k >= 3 && k <= 1000, s"k must be in [3, 1000], got $k")
     require(rounds == -1 || (rounds >= 1 && rounds <= 20),
       s"rounds must be in [1, 20] or -1 (peel to fixpoint), got $rounds")
     require(maxFixpointRounds >= 1,
       s"maxFixpointRounds must be >= 1, got $maxFixpointRounds")
-    val fixpoint = rounds == -1
-    var e = edges.select(col(src).cast("long").as("x"),
+    val e0 = pins.cache(edges.select(col(src).cast("long").as("x"),
         col(dst).cast("long").as("y"))
       .filter(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"),
         greatest(col("x"), col("y")).as("b"))
-      .distinct().persist()
-    var prevCount = if (fixpoint) e.count() else -1L
+      .distinct())
     // r17 OPTIMIZATION (opt guide §3.1): the keep set (edges at
     // support >= k-2) is derived per round from the triangle census --
     // no stats, so the semi-join that applies it planned as a
@@ -1541,41 +1437,17 @@ object Graph {
     // CURRENT edge count, which only shrinks; measure |E| once up
     // front and broadcast the two-long keep set while that bound fits
     // the session threshold. Identical surviving set either way.
-    val nE0 = if (fixpoint) prevCount else e.count()
+    val nE0 = e0.count()
     val bcastK = BroadcastGuard.fits(edges.sparkSession, nE0,
       BroadcastGuard.RowBytesNarrow)
-    var i = 0
-    var stable = false
-    while (if (fixpoint) !stable else i < rounds) {
-      if (fixpoint && i >= maxFixpointRounds) {
-        // release the current frame before aborting — a long-lived
-        // session would otherwise keep its cached partitions forever
-        e.unpersist(blocking = false)
-        throw new IllegalStateException(
-          s"kTruss fixpoint did not converge within $maxFixpointRounds " +
-            s"rounds (surviving edges: $prevCount); raise " +
-            "maxFixpointRounds if the graph genuinely needs more peels")
-      }
+    val truss = peel(pins, "kTruss", e0, nE0, rounds, maxFixpointRounds) { e =>
       val keep = edgeSupport(e).filter(col("support") >= k - 2)
         .select(col("a"), col("b"))
-      val next = e.join(if (bcastK) broadcast(keep) else keep,
-          Seq("a", "b"), "left_semi")
-        .localCheckpoint(true)
-      if (fixpoint) {
-        val n = next.count()
-        stable = n == prevCount
-        prevCount = n
-      }
-      e.unpersist(blocking = false)
-      e = next
-      i += 1
+      e.join(if (bcastK) broadcast(keep) else keep, Seq("a", "b"), "left_semi")
     }
-    val out = e.join(edgeSupport(e), Seq("a", "b"), "left")
+    pins.pin(truss.join(edgeSupport(truss), Seq("a", "b"), "left")
       .select(col("a").as("src"), col("b").as("dst"),
-        coalesce(col("support"), lit(0L)).as("support"))
-      .localCheckpoint(true)
-    e.unpersist(blocking = false)
-    out
+        coalesce(col("support"), lit(0L)).as("support")))
   }
 
   /** ASSOCIATION RULES over basket–item incidences — market-basket
@@ -1594,13 +1466,14 @@ object Graph {
     *         `minSupport`
     */
   def associationRules(df: DataFrame, basket: String, item: String,
-      maxPerBasket: Int, minSupport: Long = 2L): DataFrame = {
+      maxPerBasket: Int, minSupport: Long = 2L): DataFrame = PinScope { pins =>
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
     val pairs = bipartiteProject(df, basket, item, maxPerBasket)
       .filter(col("w") >= minSupport)
-    val bi = df.select(col(basket).as("__b"), col(item).cast("long").as("__i"))
+    val bi = pins.cache(df.select(col(basket).as("__b"),
+        col(item).cast("long").as("__i"))
       .filter(col("__b").isNotNull && col("__i").isNotNull)
-      .distinct().persist()
+      .distinct())
     val itemN = bi.groupBy(col("__i").as("it")).agg(count(lit(1)).as("nb"))
     val total = bi.select(col("__b")).distinct()
       .agg(count(lit(1)).as("n_baskets"))
@@ -1608,7 +1481,7 @@ object Graph {
         col("item_b").as("consequent"), col("w"))
       .unionByName(pairs.select(col("item_b").as("antecedent"),
         col("item_a").as("consequent"), col("w")))
-    val out = directed
+    pins.pin(directed
       .join(itemN.withColumnRenamed("it", "antecedent")
         .withColumnRenamed("nb", "n_ante"), "antecedent")
       .join(itemN.withColumnRenamed("it", "consequent")
@@ -1618,10 +1491,7 @@ object Graph {
         col("n_ante"), col("n_cons"),
         expr("(w * 1000000) div n_ante").as("conf_ppm"),
         expr("(w * n_baskets * 1000000) div (n_ante * n_cons)")
-          .as("lift_ppm"))
-      .localCheckpoint(true)
-    bi.unpersist(blocking = false)
-    out
+          .as("lift_ppm")))
   }
 
   /** Knuth multiplicative mix of a BIGINT id to a 32-bit value, as a
@@ -1700,30 +1570,27 @@ object Graph {
     *         every graph node appears, untouched nodes with bc 0
     */
   def betweennessSampled(edges: DataFrame, src: String, dst: String,
-      k: Int = 16, maxDepth: Int = 4, directed: Boolean = false): DataFrame = {
+      k: Int = 16, maxDepth: Int = 4,
+      directed: Boolean = false): DataFrame = PinScope { pins =>
     require(k >= 1 && k <= 4096, s"k must be in [1, 4096], got $k")
     require(maxDepth >= 2 && maxDepth <= 10,
       s"maxDepth must be in [2, 10], got $maxDepth")
     val e0 = edges.select(col(src).cast("long").as("esrc"),
         col(dst).cast("long").as("edst"))
       .filter(col("esrc") =!= col("edst"))
-    val e = (if (directed) e0
+    val e = pins.cache((if (directed) e0
              else e0.union(e0.select(col("edst").as("esrc"),
                col("esrc").as("edst"))))
-      .distinct().persist()
-    val nodes = e.select(col("esrc").as("node"))
-      .union(e.select(col("edst").as("node"))).distinct().persist()
+      .distinct())
+    val nodes = pins.cache(e.select(col("esrc").as("node"))
+      .union(e.select(col("edst").as("node"))).distinct())
     val piv = nodes.withColumn("hk", expr(knuthMixExpr("node")))
       .orderBy(col("hk"), col("node")).limit(k)
       .select(col("node").as("p"))
-    val out =
-      if (BroadcastGuard.fits(edges.sparkSession, e.count(),
-          BroadcastGuard.RowBytesNarrow))
-        betweennessByPivot(e, nodes, piv, maxDepth)
-      else betweennessShuffled(e, nodes, piv.localCheckpoint(true), maxDepth)
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
+    if (BroadcastGuard.fits(edges.sparkSession, e.count(),
+        BroadcastGuard.RowBytesNarrow))
+      betweennessByPivot(pins, e, nodes, piv, maxDepth)
+    else betweennessShuffled(pins, e, nodes, pins.pin(piv), maxDepth)
   }
 
   /** Out-adjacency in CSR form: `ids` are the sorted distinct node ids,
@@ -1830,8 +1697,8 @@ object Graph {
   /** Pivot-parallel [[betweennessSampled]]: `e` fits the broadcast
     * threshold, so it ships to every task as one CSR and the pivots
     * split across tasks. */
-  private def betweennessByPivot(e: DataFrame, nodes: DataFrame,
-      piv: DataFrame, maxDepth: Int): DataFrame = {
+  private def betweennessByPivot(pins: PinScope, e: DataFrame,
+      nodes: DataFrame, piv: DataFrame, maxDepth: Int): DataFrame = {
     val spark = e.sparkSession
     val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     val pairs = e.as(longPair).collect()
@@ -1841,7 +1708,7 @@ object Graph {
     // no pivot means no node: the tail alone gives the empty frame
     // (a delta stage there would be dropped by AQE's empty-join
     // propagation and left to serialize after the broadcast died)
-    if (pivots.isEmpty) betweennessTail(nodes, None)
+    if (pivots.isEmpty) betweennessTail(pins, nodes, None)
     else {
       val sc = spark.sparkContext
       val bc = sc.broadcast(g)
@@ -1851,7 +1718,7 @@ object Graph {
           val pass = new BrandesPass(bc.value, maxDepth)
           it.flatMap(pass.dependencies)
         }
-      val out = betweennessTail(nodes,
+      val out = betweennessTail(pins, nodes,
         Some(spark.createDataset(deltas)(longPair).toDF("v", "delta")))
       bc.destroy()
       out
@@ -1860,22 +1727,20 @@ object Graph {
 
   /** Level-synchronous [[betweennessSampled]] over the shuffled edge
     * list — the path past the broadcast threshold. */
-  private def betweennessShuffled(e: DataFrame, nodes: DataFrame,
-      piv: DataFrame, maxDepth: Int): DataFrame = {
+  private def betweennessShuffled(pins: PinScope, e: DataFrame,
+      nodes: DataFrame, piv: DataFrame, maxDepth: Int): DataFrame = {
     // ---- forward: levels(d) = (p, v, sigma) at exact distance d ----
     val levels = scala.collection.mutable.ArrayBuffer(
-      piv.select(col("p"), col("p").as("v"), lit(1L).as("sigma"))
-        .localCheckpoint(true))
+      pins.pin(piv.select(col("p"), col("p").as("v"), lit(1L).as("sigma"))))
     var visited = levels.head.select(col("p"), col("v"))
     var d = 1
     var emptied = false
     while (d <= maxDepth && !emptied) {
       val last = levels.last
-      val next = last.join(e, last("v") === e("esrc"))
+      val next = pins.pin(last.join(e, last("v") === e("esrc"))
         .select(col("p"), col("edst").as("v"), col("sigma"))
         .join(visited, Seq("p", "v"), "left_anti")
-        .groupBy(col("p"), col("v")).agg(sum(col("sigma")).as("sigma"))
-        .localCheckpoint(true)
+        .groupBy(col("p"), col("v")).agg(sum(col("sigma")).as("sigma")))
       if (next.isEmpty) emptied = true
       else {
         levels += next
@@ -1904,29 +1769,22 @@ object Graph {
         .select(col("p"), col("v"),
           expr("""CAST((CAST(sigma AS DECIMAL(38,0)) * (1000000 + dw))
                 |  div sw AS BIGINT)""".stripMargin).as("term"))
-      val deltaI = lvl.select(col("p"), col("v"))
+      val deltaI = pins.pin(lvl.select(col("p"), col("v"))
         .join(terms.groupBy(col("p"), col("v"))
           .agg(sum(col("term")).as("delta")), Seq("p", "v"), "left")
-        .na.fill(0L, Seq("delta"))
-        .localCheckpoint(true)
+        .na.fill(0L, Seq("delta")))
       deltaParts += deltaI
       below = deltaI
       i -= 1
     }
-    val out = betweennessTail(nodes,
-      deltaParts.reduceOption(_ unionByName _))
-    // the round pins die once the returned frame holds its own blocks
-    (piv +: (levels ++ deltaParts)).flatMap(SuffixRankMemo.checkpointRdd)
-      .foreach(_.unpersist(blocking = false))
-    out
+    betweennessTail(pins, nodes, deltaParts.reduceOption(_ unionByName _))
   }
 
   /** Shared tail of both [[betweennessSampled]] paths: per-node sum and
     * pivot count of the (v, delta) rows, every graph node kept (bc 0,
-    * n_piv 0 when no pivot reached it), pinned with one eager
-    * localCheckpoint. */
-  private def betweennessTail(nodes: DataFrame,
-      deltas: Option[DataFrame]): DataFrame = (deltas match {
+    * n_piv 0 when no pivot reached it), pinned. */
+  private def betweennessTail(pins: PinScope, nodes: DataFrame,
+      deltas: Option[DataFrame]): DataFrame = pins.pin(deltas match {
     case None =>
       nodes.select(col("node"), lit(0L).as("bc_micro"), lit(0L).as("n_piv"))
     case Some(rows) =>
@@ -1934,5 +1792,5 @@ object Graph {
         .agg(sum(col("delta")).as("bc_micro"), count(lit(1)).as("n_piv"))
       nodes.join(touched, Seq("node"), "left")
         .na.fill(0L, Seq("bc_micro", "n_piv"))
-  }).localCheckpoint(true)
+  })
 }

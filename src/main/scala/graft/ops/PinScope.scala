@@ -1,0 +1,71 @@
+package graft.ops
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** The caches (`persist`) and pins (eager `localCheckpoint`) one op
+  * makes on its way to a result, released when the op returns.
+  *
+  * A pin must be released through its RDD: `Dataset.unpersist` on a
+  * local checkpoint leaves its blocks and its `getPersistentRDDs` entry
+  * in place until a JVM GC lets the ContextCleaner drop them, so a
+  * long-lived session running iterative ops piles up every round's
+  * blocks. On exit the scope releases each cache and pin that the
+  * returned frame's analyzed plan does not read (a local checkpoint
+  * has no lineage to fall back on, so a pin the result reads must
+  * stay); when the op throws it releases all of them.
+  */
+private[graft] final class PinScope private {
+  private val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private val pins = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+
+  /** `df.persist()`, owned by this scope. */
+  def cache(df: DataFrame): DataFrame = {
+    val c = df.persist()
+    caches += c
+    c
+  }
+
+  /** Eager `localCheckpoint` of `df`, owned by this scope. A frame that
+    * already is one of this scope's pins comes back as it is. */
+  def pin(df: DataFrame): DataFrame =
+    if (PinScope.checkpointRdd(df).exists(r => pins.exists(_ eq r))) df
+    else {
+      val p = df.localCheckpoint(true)
+      pins ++= PinScope.checkpointRdd(p)
+      p
+    }
+
+  private def release(result: Option[DataFrame]): Unit = {
+    val plan = result.map(_.queryExecution.analyzed)
+    val readRdds = plan.toSeq.flatMap(_.collect { case l: LogicalRDD => l.rdd.id })
+      .toSet
+    def reads(c: DataFrame) =
+      plan.exists(_.exists(_.sameResult(c.queryExecution.analyzed)))
+    // dependents first, so no released cache gets rebuilt for a later one
+    caches.reverseIterator.filterNot(reads).foreach(_.unpersist(blocking = false))
+    pins.filterNot(r => readRdds(r.id)).foreach(_.unpersist(blocking = false))
+  }
+}
+
+private[graft] object PinScope {
+  /** Runs `body` with a fresh scope and releases what the result does
+    * not read; on a throw, releases everything. */
+  def apply(body: PinScope => DataFrame): DataFrame = {
+    val scope = new PinScope
+    var result: Option[DataFrame] = None
+    try {
+      result = Some(body(scope))
+      result.get
+    } finally scope.release(result)
+  }
+
+  /** The RDD holding a pinned frame's blocks, if `frame` is a local
+    * checkpoint. */
+  def checkpointRdd(frame: DataFrame): Option[RDD[_]] =
+    frame.queryExecution.analyzed match {
+      case l: LogicalRDD => Some(l.rdd)
+      case _ => None
+    }
+}

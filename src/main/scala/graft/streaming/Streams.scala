@@ -396,10 +396,8 @@ object Streams {
     // r13 A/B over 8 streaming gates at sf0.1 (min-of-2 each):
     // parts=2 -> 20.3 s, parts=1 -> 21.4 s, parts=4 -> 21.3 s — 2 is
     // the measured sweet spot (1 serializes multi-series state work,
-    // 4 pays extra per-partition store open/commit); env-overridable
-    // for deployments with real state volume.
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_PARTS", "2"))
+    // 4 pays extra per-partition store open/commit).
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
     val q =
       try stream.writeStream
         .format("memory")

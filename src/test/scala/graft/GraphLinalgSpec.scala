@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Graph, Linalg}
+import graft.ops.{Dedup, Graph, Linalg}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Unit specs for the link-graph (ops.Graph) and embedding-linalg
   * (ops.Linalg) operators. The e2e DuckDB gates are q171/q171b and
@@ -861,10 +862,10 @@ class GraphLinalgSpec extends SparkSpec {
 
   // --- betweennessSampled ---------------------------------------------
 
-  /** Runs `f` on both sides of betweennessSampled's broadcast guard:
-    * the session default (these graphs fit, so the pivot-parallel path
-    * over the broadcast adjacency) and a disabled threshold (-1, the
-    * shuffled level loop). */
+  /** Runs `f` on both sides of the ops' broadcast guards: the session
+    * default (these graphs fit; for betweennessSampled, the
+    * pivot-parallel path over the broadcast adjacency) and a disabled
+    * threshold (-1; the shuffled level loop). */
   private def onBothPaths(f: => Unit): Unit = {
     withClue("[default threshold] ")(f)
     withClue("[threshold -1] ")(withThreshold("-1")(f))
@@ -973,19 +974,93 @@ class GraphLinalgSpec extends SparkSpec {
     }
   }
 
-  test("betweennessSampled: only the returned frame's checkpoint stays persisted") {
-    // the persisted edge list and node set, the round pins of the
-    // shuffled loop and the pivot path's broadcast all die with the
-    // call; what is left is the returned frame's own eager checkpoint
-    val edges = Seq((1L, 2L), (2L, 4L), (1L, 3L), (3L, 4L), (4L, 5L))
-      .toDF("src", "dst")
-    onBothPaths {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val out = Graph.betweennessSampled(edges, "src", "dst", k = 3,
-        maxDepth = 3)
-      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(added == graft.ops.SuffixRankMemo.checkpointRdd(out)
-        .map(_.id).toSet, added)
+  // --- pin hygiene ------------------------------------------------------
+
+  /** Persisted RDDs `f` leaves behind in the session. */
+  private def persistedBy(f: => Any): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    f
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+  }
+
+  test("every ported graph and CC op leaves only the pins its result reads") {
+    // two triangles sharing edge 2-3, a pendant 5 and a chord 2-4: every
+    // op has rounds to run and pins to drop
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (2L, 4L),
+      (4L, 5L)).toDF("src", "dst")
+    val weighted = edges.withColumn("w", col("src") + col("dst"))
+    val labels = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "b"))
+      .toDF("node", "label")
+    val seeds = Seq((1L, "a"), (5L, "b")).toDF("node", "label")
+    val pairs = edges.select(least(col("src"), col("dst")).as("id_a"),
+      greatest(col("src"), col("dst")).as("id_b"))
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRankPpb" -> (() => Graph.pageRankPpb(edges, "src", "dst")),
+      "pageRankWeightedPpb" -> (() =>
+        Graph.pageRankWeightedPpb(weighted, "src", "dst", "w")),
+      "personalizedPageRankPpb" -> (() => Graph.personalizedPageRankPpb(
+        edges, "src", "dst", seeds, "node")),
+      "hitsCounts" -> (() => Graph.hitsCounts(edges, "src", "dst")),
+      "hitsMilli" -> (() => Graph.hitsMilli(edges, "src", "dst", 3)),
+      "hitsMilliWeighted" -> (() =>
+        Graph.hitsMilliWeighted(weighted, "src", "dst", "w", 3)),
+      "modularityMicro" -> (() =>
+        Graph.modularityMicro(edges, "src", "dst", labels, "node", "label")),
+      "modularityWeightedMicro" -> (() => Graph.modularityWeightedMicro(
+        weighted, "src", "dst", "w", labels, "node", "label")),
+      "labelPropagate" -> (() => Graph.labelPropagate(edges, "src", "dst",
+        seeds, "node", "label")),
+      "kCorePeel" -> (() => Graph.kCorePeel(edges, "src", "dst", k = 2)),
+      "kCorePeel fixpoint" -> (() =>
+        Graph.kCorePeel(edges, "src", "dst", k = 2, rounds = -1)),
+      "triangleCount" -> (() => Graph.triangleCount(edges, "src", "dst")),
+      "linkPredict" -> (() =>
+        Graph.linkPredict(edges, "src", "dst", minCommon = 1)),
+      "assortativityMicro" -> (() =>
+        Graph.assortativityMicro(edges, "src", "dst")),
+      "harmonicCentralityMicro" -> (() =>
+        Graph.harmonicCentralityMicro(edges, "src", "dst")),
+      "neighborhoodFunctionExact" -> (() =>
+        Graph.neighborhoodFunctionExact(edges, "src", "dst")),
+      "harmonicCentralityHyperBall" -> (() =>
+        Graph.harmonicCentralityHyperBall(edges, "src", "dst")),
+      "neighborhoodFunctionHyperBall" -> (() =>
+        Graph.neighborhoodFunctionHyperBall(edges, "src", "dst")),
+      "kTruss" -> (() => Graph.kTruss(edges, "src", "dst", k = 4)),
+      "kTruss fixpoint" -> (() =>
+        Graph.kTruss(edges, "src", "dst", k = 4, rounds = -1)),
+      "associationRules" -> (() => Graph.associationRules(edges, "src",
+        "dst", maxPerBasket = 4, minSupport = 1L)),
+      "betweennessSampled" -> (() => Graph.betweennessSampled(edges, "src",
+        "dst", k = 3, maxDepth = 3)),
+      "connectedComponents" -> (() => Dedup.connectedComponents(pairs)),
+      "connectedComponentsStar" -> (() =>
+        Dedup.connectedComponentsStar(pairs)))
+    onBothPaths(ops.foreach { case (name, op) =>
+      var out: org.apache.spark.sql.DataFrame = null
+      val added = persistedBy { out = op() }
+      val reads = out.queryExecution.analyzed
+        .collect { case l: LogicalRDD => l.rdd.id }.toSet
+      assert(added == reads, s"$name: added $added, result reads $reads")
+      // every pin the result reads survived the call
+      assert(out.count() >= 0L, name)
+    })
+  }
+
+  test("kCorePeel and kTruss release every pin when the fixpoint cap aborts") {
+    val chain = (1L to 8L).map(i => (i, i + 1)).toDF("src", "dst")
+    val ops: Seq[(String, () => Any)] = Seq(
+      "kCorePeel" -> (() => Graph.kCorePeel(chain, "src", "dst", k = 2,
+        rounds = -1, maxFixpointRounds = 1)),
+      "kTruss" -> (() => Graph.kTruss(chain, "src", "dst", k = 3,
+        rounds = -1, maxFixpointRounds = 1)))
+    ops.foreach { case (name, op) =>
+      val added = persistedBy {
+        val ex = intercept[IllegalStateException](op())
+        assert(ex.getMessage.contains(s"$name fixpoint did not converge"),
+          ex.getMessage)
+      }
+      assert(added.isEmpty, s"$name left $added")
     }
   }
 

@@ -61,7 +61,7 @@ class PropertySpec extends SparkSpec {
   for (dir <- Seq("backward", "forward", "nearest");
        tol <- Seq(None, Some(5L))) {
     test(s"asofJoin $dir tol=$tol matches brute force on random frames") {
-      val prop = Prop.forAll(genTrades, genQuotes) { (ts, qs) =>
+      val prop = Prop.forAllNoShrink(genTrades, genQuotes) { (ts, qs) =>
         val trades = ts.toDF("trade_id", "sym", "t")
         val quotes = qs.toDF("sym", "t", "px")
         val got = AsofJoin.asofJoin(trades, quotes, "t", "t",
@@ -141,7 +141,7 @@ class PropertySpec extends SparkSpec {
     } yield (k, v.toDouble)).suchThat(_.nonEmpty)
 
   test("saltedAgg equals the plain groupBy aggregate on skewed random data") {
-    val prop = Prop.forAll(genRows) { rows =>
+    val prop = Prop.forAllNoShrink(genRows) { rows =>
       val df = rows.toDF("k", "v")
       val salted = Skew.saltedAgg(df, Seq("k"), "v")
         .select(col("k"), col("n"), round(col("sum_v"), 6).as("s"),
@@ -171,7 +171,7 @@ class PropertySpec extends SparkSpec {
       width)
 
   test("rangeJoinBinned and RangeBinJoinRule equal the naive cross-filter") {
-    val prop = Prop.forAll(genRange) { case (pts, ivs, width) =>
+    val prop = Prop.forAllNoShrink(genRange) { case (pts, ivs, width) =>
       val points = pts.toDF("pid", "p")
       val intervals = ivs.toDF("iid", "lo", "hi")
       def pairs(df: org.apache.spark.sql.DataFrame) =
@@ -194,7 +194,7 @@ class PropertySpec extends SparkSpec {
       w <- Gen.oneOf(10.0, 33.0, 100.0)
     } yield (as.zipWithIndex.map { case ((l, s), i) => (i, l.toDouble, (l + s).toDouble) },
       bs.zipWithIndex.map { case ((l, s), i) => (i, l.toDouble, (l + s).toDouble) }, w)
-    val prop = Prop.forAll(gen) { case (as, bs, w) =>
+    val prop = Prop.forAllNoShrink(gen) { case (as, bs, w) =>
       val a = as.toDF("ai", "alo", "ahi")
       val b = bs.toDF("bi", "blo", "bhi")
       def pairs(df: org.apache.spark.sql.DataFrame) =
@@ -215,7 +215,7 @@ class PropertySpec extends SparkSpec {
 
   test("sessionize matches a sequential per-user fold") {
     val gap = 600L
-    val prop = Prop.forAll(genEvents) { rows =>
+    val prop = Prop.forAllNoShrink(genEvents) { rows =>
       val df = rows.toDF("event_id", "user_id", "sec")
         .withColumn("ts", timestamp_seconds(col("sec")))
       val got = graft.ops.ScaleJoins.sessionize(df, "user_id", "ts", gap)
@@ -369,7 +369,7 @@ class PropertySpec extends SparkSpec {
         org.apache.spark.unsafe.types.UTF8String.fromString(s))
       (raw * graft.ops.Sketches.kmvMixA + graft.ops.Sketches.kmvMixB) % p
     }.distinct.sorted
-    val prop = Prop.forAll(genDocs, genDocs) { (as, bs) =>
+    val prop = Prop.forAllNoShrink(genDocs, genDocs) { (as, bs) =>
       val k = 16
       val skA = graft.ops.Sketches.kmvSketch(as.toDF("s"), col("s"), k)
       val skB = graft.ops.Sketches.kmvSketch(bs.toDF("s"), col("s"), k)
@@ -484,7 +484,7 @@ class PropertySpec extends SparkSpec {
     def df(cents: List[Long]) = cents.zipWithIndex
       .map { case (c, i) => (i.toLong, c / 100.0) }.toDF("id", "v")
 
-    val stdProp = Prop.forAll(genVals) { cents =>
+    val stdProp = Prop.forAllNoShrink(genVals) { cents =>
       val train = cents.zipWithIndex.filter(t => fold(t._2.toLong) != 0L)
         .map(_._1)
       val n = train.size.toLong
@@ -507,7 +507,7 @@ class PropertySpec extends SparkSpec {
     }
     check("standardScale-vs-ref", stdProp, minTests = 5)
 
-    val cdfProp = Prop.forAll(genVals) { cents =>
+    val cdfProp = Prop.forAllNoShrink(genVals) { cents =>
       val train = cents.zipWithIndex.filter(t => fold(t._2.toLong) != 0L)
         .map(_._1)
       val n = train.size.toLong
@@ -519,7 +519,7 @@ class PropertySpec extends SparkSpec {
     }
     check("cdfTransform-vs-ref", cdfProp, minTests = 5)
 
-    val robustProp = Prop.forAll(genVals) { cents =>
+    val robustProp = Prop.forAllNoShrink(genVals) { cents =>
       // single group "g": lower median and MAD as type-1 ranks
       val sorted = cents.sorted
       val med = sorted((cents.size - 1) / 2)
@@ -557,7 +557,7 @@ class PropertySpec extends SparkSpec {
           if ts(i) != ts(j)
         } yield (if (ts(i) < ts(j)) (ts(i), ts(j)) else (ts(j), ts(i)))
       }.groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val prop = Prop.forAll(genDocs, Gen.choose(1, 4)) { (docs, w) =>
+    val prop = Prop.forAllNoShrink(genDocs, Gen.choose(1, 4)) { (docs, w) =>
       val got = graft.ops.Corpus.cooccurrencePmi(
           docs.toDF("doc_id", "text"), "text", window = w,
           minCount = 1L, minPair = 1L)
@@ -658,7 +658,7 @@ class PropertySpec extends SparkSpec {
       .replaceAll(" +", " ").trim)
     val genCorpus: Gen[List[String]] =
       Gen.listOfN(4, genDoc).map(_.filter(_.length >= 2))
-    val prop = Prop.forAll(genCorpus, Gen.choose(2, 5)) { (docs, l) =>
+    val prop = Prop.forAllNoShrink(genCorpus, Gen.choose(2, 5)) { (docs, l) =>
       docs.isEmpty || {
         val df = docs.zipWithIndex
           .map { case (s, i) => (i.toLong, s) }.toDF("doc_id", "text")
@@ -805,7 +805,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("suffixRankRewrite matches brute force on random corpora across partition counts") {
-    val prop = Prop.forAll(genSuffixCorpus, Gen.choose(2, 5),
+    val prop = Prop.forAllNoShrink(genSuffixCorpus, Gen.choose(2, 5),
         Gen.oneOf(1, 3, 7)) { (docs, l, np) =>
       docs.isEmpty || {
         val df = docs.zipWithIndex
@@ -838,7 +838,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("dupAttribution matches brute force on random corpora across partition counts") {
-    val prop = Prop.forAll(genSuffixCorpus, Gen.choose(2, 5),
+    val prop = Prop.forAllNoShrink(genSuffixCorpus, Gen.choose(2, 5),
         Gen.oneOf(1, 3, 7)) { (docs, l, np) =>
       docs.isEmpty || {
         val df = docs.zipWithIndex
@@ -865,7 +865,7 @@ class PropertySpec extends SparkSpec {
       (0L, 25) :: ns.zipWithIndex.map { case (n, i) => ((i + 1).toLong, n) })
 
   test("packBestFit matches the sequential BFD reference on random corpora") {
-    val prop = Prop.forAll(genPackDocs, Gen.oneOf(1, 3, 7),
+    val prop = Prop.forAllNoShrink(genPackDocs, Gen.oneOf(1, 3, 7),
         Gen.oneOf(8, 10)) { (docs, nPart, budget) =>
       val shards = 3
       val df = docs.map { case (id, n) => (id, Seq.fill(n)("w").mkString(" ")) }
@@ -907,7 +907,7 @@ class PropertySpec extends SparkSpec {
         case (ws, i) => ((i + 1).toLong, ws.mkString(" ")) })
 
   test("stupidBackoffScore matches brute force on random tiny corpora") {
-    val prop = Prop.forAll(genSbDocs, Gen.oneOf(1, 5)) { (docs, nPart) =>
+    val prop = Prop.forAllNoShrink(genSbDocs, Gen.oneOf(1, 5)) { (docs, nPart) =>
       val df = docs.toDF("doc_id", "text").repartition(nPart)
       val train = df.filter(col("doc_id") % 2 === 0)
       val got = graft.ops.Corpus.stupidBackoffScore(df, train, "doc_id", "text")
