@@ -169,13 +169,14 @@ object Bench {
     // Canary mode defaults to min-of-3 (odd passes end forward-order).
     val passes = sys.env.getOrElse("GRAFT_BENCH_PASSES",
       if (isCanary) "3" else "2").toInt
-    // Shared-JVM interference purge (round-8): iterative ops release
-    // their persist/localCheckpoint blocks via GC-driven ContextCleaner
-    // weak references, and a long bench JVM with a large heap collects
-    // them late — r7 measured the checkpoint-heavy q92 family at 2–4x
-    // its solo time purely from accumulated block-manager state. After
-    // each query, drop every leaked cache entry deterministically, and
-    // nudge a full GC every 16 queries so the cleaner actually runs.
+    // Shared-JVM interference purge (round-8): a graft.ops op releases
+    // its caches and pins through PinScope when it returns, but keeps
+    // the ones its lazy result reads, and those stay in block storage
+    // after the query until the purge below (or a GC-driven
+    // ContextCleaner pass) drops them — r7 measured the checkpoint-heavy
+    // q92 family at 2–4x its solo time purely from accumulated
+    // block-manager state. After each query, drop every remaining cache
+    // entry deterministically, and nudge a full GC every 16 queries.
     // The purge happens OUTSIDE the timed section: per-query numbers
     // measure the query, the purge is the harness's isolation cost.
     var sinceGc = 0

@@ -43,8 +43,9 @@ case class UnigramLoss(piece: String, dcost: Long)
   * the 100-TB text never shuffles.
   *
   * NOTE this operator is EAGER (like [[Corpus.decontaminateLarge]]):
-  * each of the `nMerges` iterations materializes the dictionary
-  * (`localCheckpoint`) and collects the 1-row argmax to the driver.
+  * each of the `nMerges` iterations pins the dictionary (a
+  * [[PinScope]] pin, released when the op returns unless its result
+  * reads it) and collects the 1-row argmax to the driver.
   *
   * Merge semantics (deterministic, engine-independent): within-word
   * adjacent pairs; each rule is applied as TWO passes of
@@ -78,13 +79,14 @@ object Bpe {
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .withColumn("toks", trim(regexp_replace(col("w"), "(.)", "$1 ")))
 
-  /** Run the training loop; returns the learned rules and the final
-    * per-word tokenization dictionary (w, cnt, toks).
+  /** Run the training loop with its dictionary pins in `pins`; returns
+    * the learned rules and the final per-word tokenization dictionary
+    * (w, cnt, toks).
     */
-  private def train(df: DataFrame, textCol: String, nMerges: Int)
-      : (Seq[BpeMerge], DataFrame) = {
+  private def train(pins: PinScope, df: DataFrame, textCol: String,
+      nMerges: Int): (Seq[BpeMerge], DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var dict = wordDict(df, textCol).localCheckpoint(true)
+    var dict = pins.pin(wordDict(df, textCol))
     val rules = Seq.newBuilder[BpeMerge]
     var k = 1
     var exhausted = false
@@ -103,8 +105,7 @@ object Bpe {
       else {
         val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         rules += BpeMerge(k, l, r, c)
-        dict = dict.withColumn("toks", mergeOnce(col("toks"), l, r))
-          .localCheckpoint(true)
+        dict = pins.pin(dict.withColumn("toks", mergeOnce(col("toks"), l, r)))
         k += 1
       }
     }
@@ -114,11 +115,11 @@ object Bpe {
   /** Learn the top `nMerges` merge rules from `df(textCol)`. Returns
     * one row per rule: (iter, l_tok, r_tok, pair_cnt), iter ascending.
     */
-  def learnMerges(df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
-    val spark = df.sparkSession
-    val (rules, _) = train(df, textCol, nMerges)
-    spark.createDataFrame(rules).orderBy(col("iter"))
-  }
+  def learnMerges(df: DataFrame, textCol: String, nMerges: Int): DataFrame =
+    PinScope { pins =>
+      val (rules, _) = train(pins, df, textCol, nMerges)
+      df.sparkSession.createDataFrame(rules).orderBy(col("iter"))
+    }
 
   /** Learn `nMerges` rules on `df` itself, then encode every document
     * with the final dictionary: a broadcast join on the word — the
@@ -126,8 +127,8 @@ object Bpe {
     * (idCol, n_words, n_subwords).
     */
   def encode(df: DataFrame, idCol: String, textCol: String,
-      nMerges: Int): DataFrame = {
-    val (_, dict) = train(df, textCol, nMerges)
+      nMerges: Int): DataFrame = PinScope { pins =>
+    val (_, dict) = train(pins, df, textCol, nMerges)
     val sizes = dict.select(col("w"),
       size(split(col("toks"), " ")).as("n_sub"))
     df.select(col(idCol),
@@ -193,7 +194,7 @@ object Bpe {
   def unigramTrainEm(df: DataFrame, textCol: String,
       nBigrams: Int = 40, nTrigrams: Int = 20, nWords: Int = 10,
       keepTop: Int = 24, iterations: Int = 2,
-      maxWordLen: Int = 16): DataFrame = {
+      maxWordLen: Int = 16): DataFrame = PinScope { pins =>
     require(iterations >= 1 && iterations <= 4,
       s"iterations must be in [1, 4], got $iterations")
     require(keepTop >= 1 && keepTop <= 4096,
@@ -201,11 +202,10 @@ object Bpe {
     require(maxWordLen >= 3 && maxWordLen <= 64,
       s"maxWordLen must be in [3, 64], got $maxWordLen")
     val spark = df.sparkSession
-    val wf = df
+    val wf = pins.pin(df
       .select(explode(split(Dedup.normText(col(textCol)), " ")).as("w"))
       .filter(length(col("w")) > 0 && length(col("w")) <= maxWordLen)
-      .groupBy("w").agg(count(lit(1)).as("f"))
-      .localCheckpoint(true)
+      .groupBy("w").agg(count(lit(1)).as("f")))
     def subCounts(len: Int): DataFrame = wf
       .filter(length(col("w")) >= len)
       .select(col("f"), explode(expr(
@@ -228,7 +228,7 @@ object Bpe {
             log(col("cnt").cast("double") / col("tot"))).cast("long"))
         .select(col("piece"), col("cnt"), col("cost"))
     }
-    var cur = withCosts(seed).localCheckpoint(true)
+    var cur = pins.pin(withCosts(seed))
     var it = 0
     while (it < iterations) {
       val vm = cur.select(col("piece"), col("cost")).collect()
@@ -253,8 +253,9 @@ object Bpe {
         }
         UnigramSeg(path, losses)
       }
-      val seg = wf.select(col("f"), segUdf(col("w")).as("r"))
-        .localCheckpoint(true)
+      val seg = pins.pin(wf.select(col("f"), segUdf(col("w")).as("r")))
+      // the pin above is the round's only reader of bc
+      bc.destroy()
       val counts = seg
         .select(col("f"), explode(col("r.path")).as("piece"))
         .groupBy("piece").agg(sum(col("f")).as("cnt"))
@@ -277,7 +278,7 @@ object Bpe {
         .orderBy(col("loss").desc, col("cnt").desc, col("piece").asc)
         .limit(keepTop)
         .select(col("piece"), col("cnt"))
-      cur = withCosts(charCnt.unionByName(nonChar)).localCheckpoint(true)
+      cur = pins.pin(withCosts(charCnt.unionByName(nonChar)))
       it += 1
     }
     cur

@@ -351,7 +351,7 @@ object Corpus {
   }
 
   def semanticDupPairs(df: DataFrame, id: String, vec: String,
-      nClusters: Int, threshold: Double, iters: Int): DataFrame = {
+      nClusters: Int, threshold: Double, iters: Int): DataFrame = PinScope { _ =>
     val cents = Similarity.kmeansCentroids(df, id, vec, nClusters, iters)
     val assigned = Similarity.kmeansAssign(df, id, vec, cents)
     val l = assigned.select(col("cl"), col(id).as("a"), col(vec).as("va"))
@@ -1019,7 +1019,8 @@ object Corpus {
     val keyed = docs.select(col(id), explode(keysUdf(norm)).as("k"))
       .select(col(id), col("k._1").as("p"),
         monotonically_increasing_id().as("__gid"), col("k"))
-    val out = PinScope { pins =>
+    // detached: the memo keeps the returned pin past any enclosing scope
+    val out = PinScope.detached { pins =>
       var ranks = classIds(keyed,
         (2 to (k0 + perLong - 1) / perLong + 1).map(i => col(s"k._$i")))
       // doubling past k₀: class_{k+s}(p) = class of (r_k(p), r_k(p+s));
@@ -2188,7 +2189,7 @@ object Corpus {
     *         summed floor-nano log-score (higher = more train-like).
     */
   def stupidBackoffScore(corpus: DataFrame, train: DataFrame, id: String,
-      text: String, alpha: Double = 0.4): DataFrame = {
+      text: String, alpha: Double = 0.4): DataFrame = PinScope { pins =>
     require(alpha > 0 && alpha < 1, "need 0 < alpha < 1")
     // ONE pass over the train token stream: group the ladder by
     // (w1, w2, w3) — null-tail rows included — then derive every
@@ -2199,11 +2200,10 @@ object Corpus {
     // Five derived tables (c1 twice, c2 twice, c3, nTot) consume g123
     // and Catalyst does not dedupe the shared subtree — the r18 before-
     // plan shows SIX window+double-exchange passes over the train
-    // ladder. The checkpoint is vocabulary-sized; every consumer now
-    // reads materialized rows.
-    val g123 = gramLadder(train, id, text)
-      .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    // ladder. The pin is vocabulary-sized; every consumer now reads
+    // materialized rows.
+    val g123 = pins.pin(gramLadder(train, id, text)
+      .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c")))
     val c1 = g123.groupBy(col("w1")).agg(sum(col("c")).as("c1u"))
     val c2 = g123.filter(col("w2").isNotNull)
       .groupBy(col("w1"), col("w2")).agg(sum(col("c")).as("c12"))
@@ -2252,7 +2252,7 @@ object Corpus {
     * polynomial), so the gate cannot split on one.
     */
   def stupidBackoffScoreHashed(corpus: DataFrame, train: DataFrame,
-      id: String, text: String, alpha: Double = 0.4): DataFrame = {
+      id: String, text: String, alpha: Double = 0.4): DataFrame = PinScope { pins =>
     require(alpha > 0 && alpha < 1, "need 0 < alpha < 1")
     def hashed(df: DataFrame): DataFrame =
       gramLadder(df, id, text).filter(col("w3").isNotNull).select(col("did"),
@@ -2264,11 +2264,10 @@ object Corpus {
     // same one-pass train census as the string tier; hashes are
     // computed on the VOCABULARY-sized frame (a hash is a function of
     // the gram, so hash-then-sum equals hashing the raw stream).
-    // r18: checkpointed once for the same shared-subtree reason as the
+    // r18: pinned once for the same shared-subtree reason as the
     // string tier (five consumers, no Catalyst dedup).
-    val g123 = gramLadder(train, id, text)
-      .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val g123 = pins.pin(gramLadder(train, id, text)
+      .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c")))
     val c1 = g123.select(poly_hash(col("w1")).as("h1"), col("c"))
       .groupBy(col("h1")).agg(sum(col("c")).as("c1u"))
     val big = g123.filter(col("w2").isNotNull).select(

@@ -448,24 +448,23 @@ object Dedup {
     */
   def dedupCorpusKeepBest(df: DataFrame, id: String, text: String,
       quality: String, k: Int = 5, n: Int = 16, bands: Int = 4,
-      minEstJaccard: Double = 0.9): DataFrame = {
+      minEstJaccard: Double = 0.9): DataFrame = PinScope { pins =>
     // memb is consumed TWICE (per-cluster argmax + the final join-back);
     // without materializing it each consumer re-runs the dedupCorpus
     // membership build — i.e. a second full pass over the corpus text
-    // column at 100 TB. Eagerly checkpoint the 3-NARROW-COLUMN frame
-    // (cheap to write) and leave the wide final join LAZY — the r12 A/B
+    // column at 100 TB. Eagerly pin the 3-NARROW-COLUMN frame (cheap to
+    // write) and leave the wide final join LAZY — the r12 A/B
     // (scripts/ab_keepbest.scala, min-of-3 at sf0.1): shipped r10/r11
     // form (lazy persist + eager localCheckpoint of the FINAL frame)
     // 6.04 s, this form 4.27 s, persist+count barrier 4.88 s, base
-    // dedupCorpus 3.68 s — all one text scan by inputMB; checkpointing
-    // the narrow frame recovers most of the r10 regression because the
-    // synchronous write is memb-sized, not result-sized. Checkpoint
-    // blocks are released when the frame is GC'd; no unpersist
-    // bookkeeping needed.
-    val memb = dedupCorpus(df, id, text, k, n, bands, minEstJaccard)
+    // dedupCorpus 3.68 s — all one text scan by inputMB; pinning the
+    // narrow frame recovers most of the r10 regression because the
+    // synchronous write is memb-sized, not result-sized. The result
+    // reads memb, so its pin outlives the call; the connected-components
+    // pin that dedupCorpus kept is released here.
+    val memb = pins.pin(dedupCorpus(df, id, text, k, n, bands, minEstJaccard)
       .select(col(id), col("canonical_id"))
-      .join(df.select(col(id), col(quality)), Seq(id))
-      .localCheckpoint(true)
+      .join(df.select(col(id), col(quality)), Seq(id)))
     val best = memb.groupBy(col("canonical_id"))
       .agg(max(struct(col(quality).as("q"), (-col(id)).as("negid"))).as("b"))
       .select(col("canonical_id"), (-col("b.negid")).as("best_id"))
@@ -576,14 +575,14 @@ object Dedup {
     * DedupCapSpec property-checks capped ≡ uncapped; q95b hash-gates it
     * on the corpus fixture against the exact DuckDB oracle.
     *
-    * The capped path caches the per-doc gram arrays (computed by a UDF —
-    * the expensive pass) because every cap derivation re-reads them; the
-    * cache is released by Spark's ContextCleaner when the returned plan
-    * is dropped.
+    * The capped path pins the per-doc gram arrays (computed by a UDF —
+    * the expensive pass) because every cap derivation re-reads them;
+    * the pins belong to the op's [[PinScope]] and outlive the call only
+    * because the returned plan reads them.
     */
   def ngramJaccardPairs(df: DataFrame, id: String, text: String,
       block: String, ngram: Int = 3, minJaccard: Double = 0.2,
-      maxDf: Int = 0, maxUnsafeFrac: Double = 0.5): DataFrame = {
+      maxDf: Int = 0, maxUnsafeFrac: Double = 0.5): DataFrame = PinScope { pins =>
     // long ids ride the posting-list structs; a non-integral id would
     // silently cast to null and NPE inside pairGenUdf (ADVICE r2)
     locally {
@@ -632,13 +631,9 @@ object Dedup {
         .filter(col("jaccard") >= minJaccard)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
     } else {
-      // localCheckpoint, not persist(): the returned frame is lazy, so a
-      // persist here could never be unpersisted and every call leaked a
-      // cache-manager entry into the shared session (suite-wide memory
-      // pressure). An eager local checkpoint materializes the gram
-      // arrays once for the four consumers below and is reclaimed by
-      // the ContextCleaner when unreferenced.
-      val dg = docGrams.localCheckpoint(true)
+      // an eager pin materializes the gram arrays once for the four
+      // consumers below
+      val dg = pins.pin(docGrams)
       val g = explodeGrams(dg)
       // stop grams: tiny by construction (only grams in >maxDf docs),
       // so every join against it below is a broadcast — g is never
@@ -656,12 +651,11 @@ object Dedup {
       // they keep hot postings (hot-heavy boilerplate; rare by design).
       // Checkpointed eagerly (N tiny rows) so the guard aggregate below
       // is free and the pair stage doesn't recompute the hot-count join.
-      val docStats = dg.select(col(id), col("sz"))
+      val docStats = pins.pin(dg.select(col(id), col("sz"))
         .join(hotPerDoc.select(col(id), col("h")), Seq(id), "left")
         .na.fill(0, Seq("h"))
         .withColumn("u",
-          (col("h") * (1 + minJaccard) > lit(minJaccard) * col("sz")).cast("int"))
-        .localCheckpoint(true)
+          (col("h") * (1 + minJaccard) > lit(minJaccard) * col("sz")).cast("int")))
       // GUARD (round-7): the cap is only sub-quadratic while unsafe docs
       // are rare — on a wholesale-duplicated corpus every gram goes hot,
       // every doc goes unsafe, hot postings are all kept, and pair

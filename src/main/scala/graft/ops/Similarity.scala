@@ -67,14 +67,13 @@ object Similarity {
     * @return (a_id, b_id, cos) for every mutual pair
     */
   def mutualNearestPairs(a: DataFrame, b: DataFrame, id: String,
-      vec: String, excludeSelf: Boolean = false): DataFrame = {
+      vec: String, excludeSelf: Boolean = false): DataFrame = PinScope { pins =>
     val av = a.select(col(id).as("a_id"), col(vec).as("a_vec"))
     val bv = b.select(col(id).as("b_id"), col(vec).as("b_vec"))
     val cond = if (excludeSelf) col("a_id") =!= col("b_id") else lit(true)
-    val scored = av.join(broadcast(bv), cond)
+    val scored = pins.cache(av.join(broadcast(bv), cond)
       .withColumn("cos", dot_f(col("a_vec"), col("b_vec")))
-      .select(col("a_id"), col("b_id"), col("cos"))
-      .persist()
+      .select(col("a_id"), col("b_id"), col("cos")))
     val wa = Window.partitionBy(col("a_id"))
       .orderBy(col("cos").desc, col("b_id").asc)
     val wb = Window.partitionBy(col("b_id"))
@@ -83,13 +82,10 @@ object Similarity {
       .filter(col("r") === 1).drop("r")
     val topB = scored.withColumn("r", row_number().over(wb))
       .filter(col("r") === 1).drop("r")
-    val out = topA
+    pins.pin(topA
       .join(topB.select(col("a_id"), col("b_id")), Seq("a_id", "b_id"),
         "left_semi")
-      .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos"))
-      .localCheckpoint(true)
-    scored.unpersist(blocking = false)
-    out
+      .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos")))
   }
 
   /** MARGIN-scored bitext mining (Artetxe & Schwenk 2019's ratio
@@ -120,29 +116,37 @@ object Similarity {
     *         a with margin above threshold (ties: lowest b_id)
     */
   def marginMinedPairs(a: DataFrame, b: DataFrame, id: String,
-      vec: String, k: Int = 4, minMarginPpm: Long = 1050000L): DataFrame = {
+      vec: String, k: Int = 4, minMarginPpm: Long = 1050000L): DataFrame = PinScope { pins =>
     require(k >= 1 && k <= 1000, s"k must be in [1, 1000], got $k")
     val av = a.select(col(id).as("a_id"), col(vec).as("a_vec"))
     val bv = b.select(col(id).as("b_id"), col(vec).as("b_vec"))
-    val scored = av.join(broadcast(bv), lit(true))
+    val scored = pins.cache(av.join(broadcast(bv), lit(true))
       .withColumn("cos_u6",
         floor(dot_f(col("a_vec"), col("b_vec")) * lit(1000000.0d))
           .cast("long"))
-      .select(col("a_id"), col("b_id"), col("cos_u6"))
-      .persist()
+      .select(col("a_id"), col("b_id"), col("cos_u6")))
+    pins.pin(marginPick(scored, scored, k, minMarginPpm))
+  }
+
+  /** The margin step shared by both mining tiers over scored
+    * (a_id, b_id, cos_u6) pairs: sa = top-k sum per a over `ab`, sb =
+    * top-k sum per b over `ba`, then the best-margin b per a of `ab`
+    * above threshold. */
+  private def marginPick(ab: DataFrame, ba: DataFrame, k: Int,
+      minMarginPpm: Long): DataFrame = {
     val wa = Window.partitionBy(col("a_id"))
       .orderBy(col("cos_u6").desc, col("b_id").asc)
     val wb = Window.partitionBy(col("b_id"))
       .orderBy(col("cos_u6").desc, col("a_id").asc)
-    val sumA = scored.withColumn("r", row_number().over(wa))
+    val sumA = ab.withColumn("r", row_number().over(wa))
       .filter(col("r") <= k)
       .groupBy(col("a_id")).agg(sum(col("cos_u6")).as("sa"))
-    val sumB = scored.withColumn("r", row_number().over(wb))
+    val sumB = ba.withColumn("r", row_number().over(wb))
       .filter(col("r") <= k)
       .groupBy(col("b_id")).agg(sum(col("cos_u6")).as("sb"))
     val wm = Window.partitionBy(col("a_id"))
       .orderBy(col("margin_ppm").desc, col("b_id").asc)
-    val out = scored.filter(col("cos_u6") > 0)
+    ab.filter(col("cos_u6") > 0)
       .join(sumA, "a_id").join(sumB, "b_id")
       .filter(col("sa") + col("sb") > 0)
       .withColumn("margin_ppm",
@@ -150,9 +154,6 @@ object Similarity {
       .withColumn("rm", row_number().over(wm))
       .filter(col("rm") === 1 && col("margin_ppm") >= minMarginPpm)
       .select(col("a_id"), col("b_id"), col("cos_u6"), col("margin_ppm"))
-      .localCheckpoint(true)
-    scored.unpersist(blocking = false)
-    out
   }
 
   /** The SCALE tier of [[marginMinedPairs]] — the q96b discipline
@@ -189,7 +190,7 @@ object Similarity {
     */
   def marginMinedPairsIvf(a: DataFrame, b: DataFrame, id: String,
       vec: String, k: Int = 4, minMarginPpm: Long = 1050000L,
-      nClusters: Int = 8, nProbe: Int = 2, itersCoarse: Int = 3): DataFrame = {
+      nClusters: Int = 8, nProbe: Int = 2, itersCoarse: Int = 3): DataFrame = PinScope { pins =>
     require(k >= 1 && k <= 1000, s"k must be in [1, 1000], got $k")
     require(nProbe >= 1 && nProbe <= nClusters,
       s"nProbe must be in [1, $nClusters], got $nProbe")
@@ -198,7 +199,6 @@ object Similarity {
     def candidates(src: DataFrame, srcCol: String,
         dst: DataFrame, dstCol: String): DataFrame = {
       val cents = kmeansCentroids(dst, id, vec, nClusters, itersCoarse)
-        .localCheckpoint(true)
       val dstA = kmeansAssign(dst, id, vec, cents)
         .select(col(id).as(dstCol), col(vec).as("d_vec"), col("cl"))
       val wProbe = Window.partitionBy(col(srcCol))
@@ -215,32 +215,8 @@ object Similarity {
             .cast("long"))
         .select(col("a_id"), col("b_id"), col("cos_u6"))
     }
-    val candAB = candidates(a, "a_id", b, "b_id").persist()
-    val candBA = candidates(b, "b_id", a, "a_id").persist()
-    val wa = Window.partitionBy(col("a_id"))
-      .orderBy(col("cos_u6").desc, col("b_id").asc)
-    val wb = Window.partitionBy(col("b_id"))
-      .orderBy(col("cos_u6").desc, col("a_id").asc)
-    val sumA = candAB.withColumn("r", row_number().over(wa))
-      .filter(col("r") <= k)
-      .groupBy(col("a_id")).agg(sum(col("cos_u6")).as("sa"))
-    val sumB = candBA.withColumn("r", row_number().over(wb))
-      .filter(col("r") <= k)
-      .groupBy(col("b_id")).agg(sum(col("cos_u6")).as("sb"))
-    val wm = Window.partitionBy(col("a_id"))
-      .orderBy(col("margin_ppm").desc, col("b_id").asc)
-    val out = candAB.filter(col("cos_u6") > 0)
-      .join(sumA, "a_id").join(sumB, "b_id")
-      .filter(col("sa") + col("sb") > 0)
-      .withColumn("margin_ppm",
-        expr(s"(cos_u6 * ${2L * k}L * 1000000L) div (sa + sb)"))
-      .withColumn("rm", row_number().over(wm))
-      .filter(col("rm") === 1 && col("margin_ppm") >= minMarginPpm)
-      .select(col("a_id"), col("b_id"), col("cos_u6"), col("margin_ppm"))
-      .localCheckpoint(true)
-    candAB.unpersist(blocking = false)
-    candBA.unpersist(blocking = false)
-    out
+    pins.pin(marginPick(pins.cache(candidates(a, "a_id", b, "b_id")),
+      pins.cache(candidates(b, "b_id", a, "a_id")), k, minMarginPpm))
   }
 
   /** Deterministic negative sampling for contrastive training — k
@@ -397,22 +373,21 @@ object Similarity {
     * Seeds = the k lowest-id vectors (no RNG — reproducible across runs
     * and engines); a FIXED iteration count, each round one broadcast
     * join (assign) + one aggregation (recompute means) — no driver-side
-    * data, no convergence collect. Centroids are localCheckpoint'ed per
-    * round so the iteration does not nest Catalyst plans. At 100 TB the
+    * data, no convergence collect. Each round's centroids are a pin of
+    * the op's [[PinScope]], so the iteration does not nest Catalyst
+    * plans; only the last round's pin outlives the call. At 100 TB the
     * corpus is scanned once per round; k and dim stay driver-trivial.
     */
   def kmeansCentroids(corpus: DataFrame, id: String, vec: String,
-      k: Int, iters: Int = 3, seeding: String = "lowest-id"): DataFrame = {
+      k: Int, iters: Int = 3, seeding: String = "lowest-id"): DataFrame = PinScope { pins =>
     val wSeed = Window.orderBy(col(id))
-    var cents = (seeding match {
+    var cents = pins.pin(seeding match {
       case "farthest" => kmeansSeedsFarthest(corpus, id, vec, k)
       case _ => corpus.orderBy(col(id)).limit(k)
         .select((row_number().over(wSeed) - 1).cast("long").as("cl"), col(vec).as("c_vec"))
-    }).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      cents = centroidMeans(kmeansAssign(corpus, id, vec, cents), vec)
-        .localCheckpoint(true)
-    }
+    })
+    for (_ <- 1 to iters)
+      cents = pins.pin(centroidMeans(kmeansAssign(corpus, id, vec, cents), vec))
     cents
   }
 
@@ -436,13 +411,12 @@ object Similarity {
     * returns what exists (downstream assign handles any cluster count).
     */
   def kmeansSeedsFarthest(corpus: DataFrame, id: String, vec: String,
-      k: Int): DataFrame = {
+      k: Int): DataFrame = PinScope { pins =>
     require(k >= 1, s"kmeansSeedsFarthest: k must be >= 1, got $k")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val pts = corpus.select(col(id).cast("long").as("__id"), col(vec).as("__v"),
-        xxhash64(col(id).cast("long")).as("__h"))
-      .localCheckpoint(true)
+    val pts = pins.pin(corpus.select(col(id).cast("long").as("__id"), col(vec).as("__v"),
+        xxhash64(col(id).cast("long")).as("__h")))
     val seeds = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
     val anchor = pts.orderBy(col("__h").asc, col("__id").asc).limit(1).collect()
     if (anchor.nonEmpty) {
@@ -466,6 +440,7 @@ object Similarity {
           .select(col("__id"), col("__v"), col("__h"), minD(col("__v")).as("__d"))
           .orderBy(col("__d").desc, col("__h").asc, col("__id").asc)
           .limit(1).collect()
+        bcSeeds.destroy()
         if (next.isEmpty) exhausted = true
         else seeds += ((next(0).getLong(0), next(0).getSeq[Float](1).toArray))
       }
@@ -481,7 +456,7 @@ object Similarity {
     */
   def ivfTopKLearned(corpus: DataFrame, queries: DataFrame, id: String,
       vec: String, k: Int, nClusters: Int, nProbe: Int = 2,
-      iters: Int = 3, seeding: String = "lowest-id"): DataFrame = {
+      iters: Int = 3, seeding: String = "lowest-id"): DataFrame = PinScope { _ =>
     val cents = kmeansCentroids(corpus, id, vec, nClusters, iters, seeding)
     ivfTopK(kmeansAssign(corpus, id, vec, cents), queries, id, vec, "cl", k, nProbe)
   }
@@ -503,7 +478,7 @@ object Similarity {
     * becomes an 8× smaller, cache-resident pass over codes.
     */
   def pqCodebooks(corpus: DataFrame, id: String, vec: String,
-      dim: Int, nSub: Int, k: Int, iters: Int = 2): DataFrame = {
+      dim: Int, nSub: Int, k: Int, iters: Int = 2): DataFrame = PinScope { pins =>
     require(nSub > 0 && dim % nSub == 0,
       s"pqCodebooks: dim=$dim must divide evenly into nSub=$nSub subspaces")
     val sd = dim / nSub
@@ -520,14 +495,13 @@ object Similarity {
       .select(col("__id"), explode(subIdx).as("sub"), col("__v"))
       .select(col("sub"), col("__id"),
         slice(col("__v"), col("sub") * sd + 1, lit(sd)).as("v"))
-    var cents = corpus.orderBy(col(id)).limit(k)
+    var cents = pins.pin(corpus.orderBy(col(id)).limit(k)
       .select(col(id).as("__id"), col(vec).as("__v"))
       .withColumn("cl",
         (row_number().over(Window.orderBy(col("__id"))) - 1).cast("long"))
       .select(explode(subIdx).as("sub"), col("cl"), col("__v"))
       .select(col("sub"), col("cl"),
-        slice(col("__v"), col("sub") * sd + 1, lit(sd)).as("c_vec"))
-      .localCheckpoint(true)
+        slice(col("__v"), col("sub") * sd + 1, lit(sd)).as("c_vec")))
     for (_ <- 1 to iters) {
       val bc = spark.sparkContext.broadcast(collectBooks(cents))
       val assignUdf = udf { (sub: Int, v: Seq[Float]) =>
@@ -543,7 +517,7 @@ object Similarity {
         }
         best
       }
-      cents = exploded
+      cents = pins.pin(exploded
         .withColumn("cl", assignUdf(col("sub"), col("v")))
         .select(col("sub"), col("cl"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("sub"), col("cl"), col("pos"))
@@ -551,8 +525,9 @@ object Similarity {
         .groupBy(col("sub"), col("cl"))
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("sub"), col("cl"),
-          transform(col("pm"), p => p.getField("m").cast("float")).as("c_vec"))
-        .localCheckpoint(true)
+          transform(col("pm"), p => p.getField("m").cast("float")).as("c_vec")))
+      // the pin above is the round's only reader of bc
+      bc.destroy()
     }
     cents
   }
@@ -651,9 +626,8 @@ object Similarity {
   /** End-to-end PQ ANN: train codebooks → encode the corpus → ADC scan. */
   def pqTopKLearned(corpus: DataFrame, queries: DataFrame, id: String,
       vec: String, dim: Int, k: Int, nSub: Int, nCodes: Int,
-      iters: Int = 2): DataFrame = {
+      iters: Int = 2): DataFrame = PinScope { _ =>
     val books = pqCodebooks(corpus, id, vec, dim, nSub, nCodes, iters)
-      .localCheckpoint(true)
     pqTopK(pqAssign(corpus, id, vec, books), queries, id, vec, k, books)
   }
 
@@ -677,11 +651,9 @@ object Similarity {
   def ivfPqTopKLearned(corpus: DataFrame, queries: DataFrame, id: String,
       vec: String, dim: Int, k: Int, nClusters: Int, nProbe: Int,
       nSub: Int, nCodes: Int, itersCoarse: Int = 3,
-      itersPq: Int = 2): DataFrame = {
+      itersPq: Int = 2): DataFrame = PinScope { _ =>
     val cents = kmeansCentroids(corpus, id, vec, nClusters, itersCoarse)
-      .localCheckpoint(true)
     val books = pqCodebooks(corpus, id, vec, dim, nSub, nCodes, itersPq)
-      .localCheckpoint(true)
     // one pass emits (id, cl, codes): the stored index row
     val coded = pqAssign(kmeansAssign(corpus, id, vec, cents), id, vec,
       books, keep = Seq("cl"))
@@ -986,9 +958,8 @@ object Similarity {
     */
   def ivfSqTopKLearned(corpus: DataFrame, queries: DataFrame, id: String,
       vec: String, k: Int, nClusters: Int, nProbe: Int,
-      itersCoarse: Int = 3): DataFrame = {
+      itersCoarse: Int = 3): DataFrame = PinScope { _ =>
     val cents = kmeansCentroids(corpus, id, vec, nClusters, itersCoarse)
-      .localCheckpoint(true)
     val scale = sqMaxAbs(corpus, vec)
     // the stored index row: (id, cl, sq_codes)
     val coded = sqAssign(kmeansAssign(corpus, id, vec, cents), id, vec,

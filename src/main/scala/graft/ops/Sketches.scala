@@ -542,7 +542,7 @@ object Sketches {
     * @return (value, cnt, n_total) for every value with cnt·k > N,
     *         one row per heavy hitter
     */
-  def heavyHitters(df: DataFrame, valueCol: String, k: Int): DataFrame = {
+  def heavyHitters(df: DataFrame, valueCol: String, k: Int): DataFrame = PinScope { pins =>
     require(k >= 2 && k <= 100000, s"k must be in [2, 100000], got $k")
     val spark = df.sparkSession
     import spark.implicits._
@@ -551,7 +551,7 @@ object Sketches {
     // pass 1 emits candidates AND the partition row count in one scan
     // (a null-keyed count row per partition), so the whole op is TWO
     // scans — sketch+count, then the candidate recount — not three
-    val summary = vals.as[String].mapPartitions { it =>
+    val summary = pins.cache(vals.as[String].mapPartitions { it =>
       // Misra–Gries: k counters; decrement-all on overflow admission.
       // Each trigger removes k mass and mass added ≤ n_p, so triggers
       // ≤ n_p/k and the O(k) sweep amortizes to O(1)/row.
@@ -572,20 +572,17 @@ object Sketches {
       }
       Iterator.single((Option.empty[String], n)) ++
         m.keysIterator.map(v => (Option(v), 0L))
-    }.toDF("v", "n").persist()
+    }.toDF("v", "n"))
     val candidates = summary.filter(col("v").isNotNull)
       .select(col("v")).distinct()
     val total = summary.filter(col("v").isNull)
       .agg(sum(col("n")).as("n_total"))
-    val out = vals.join(broadcast(candidates), Seq("v"), "left_semi")
+    pins.pin(vals.join(broadcast(candidates), Seq("v"), "left_semi")
       .groupBy(col("v"))
       .agg(count(lit(1)).as("cnt"))
       .crossJoin(broadcast(total))
       .filter(col("cnt") * k > col("n_total"))
-      .select(col("v").as("value"), col("cnt"), col("n_total"))
-      .localCheckpoint(true)
-    summary.unpersist(blocking = false)
-    out
+      .select(col("v").as("value"), col("cnt"), col("n_total")))
   }
 
   /** Grouped [[heavyHitters]]: per-group exact heavy hitters (every
@@ -609,7 +606,7 @@ object Sketches {
     * @return (grp, value, cnt, n_total) per heavy hitter
     */
   def heavyHittersBy(df: DataFrame, group: String, valueCol: String,
-      k: Int, maxGroups: Int = 100000): DataFrame = {
+      k: Int, maxGroups: Int = 100000): DataFrame = PinScope { pins =>
     require(k >= 2 && k <= 100000, s"k must be in [2, 100000], got $k")
     require(maxGroups >= 1, s"maxGroups must be >= 1, got $maxGroups")
     val spark = df.sparkSession
@@ -624,7 +621,7 @@ object Sketches {
         "and the candidate broadcast is O(groups x k); shard by the " +
         "group column and run per shard, or raise maxGroups if the " +
         "driver/executor memory budget allows")
-    val summary = vals.as[(String, String)].mapPartitions { it =>
+    val summary = pins.cache(vals.as[(String, String)].mapPartitions { it =>
       val ms = scala.collection.mutable.HashMap
         .empty[String, scala.collection.mutable.HashMap[String, Long]]
       val ns = scala.collection.mutable.HashMap.empty[String, Long]
@@ -646,20 +643,17 @@ object Sketches {
       ns.iterator.map { case (g, n) => (g, Option.empty[String], n) } ++
         ms.iterator.flatMap { case (g, m) =>
           m.keysIterator.map(v => (g, Option(v), 0L)) }
-    }.toDF("g", "v", "n").persist()
+    }.toDF("g", "v", "n"))
     val candidates = summary.filter(col("v").isNotNull)
       .select(col("g"), col("v")).distinct()
     val totals = summary.filter(col("v").isNull)
       .groupBy(col("g")).agg(sum(col("n")).as("n_total"))
-    val out = vals.join(broadcast(candidates), Seq("g", "v"), "left_semi")
+    pins.pin(vals.join(broadcast(candidates), Seq("g", "v"), "left_semi")
       .groupBy(col("g"), col("v"))
       .agg(count(lit(1)).as("cnt"))
       .join(broadcast(totals), Seq("g"))
       .filter(col("cnt") * k > col("n_total"))
       .select(col("g").as("grp"), col("v").as("value"), col("cnt"),
-        col("n_total"))
-      .localCheckpoint(true)
-    summary.unpersist(blocking = false)
-    out
+        col("n_total")))
   }
 }

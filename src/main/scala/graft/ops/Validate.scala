@@ -1063,9 +1063,8 @@ object Validate {
     *         kept_key_sum) one row per chain entry
     */
   def cascadePurgePlan(roots: DataFrame, rootKey: String,
-      chain: Seq[(String, DataFrame, String, String)]): DataFrame = {
+      chain: Seq[(String, DataFrame, String, String)]): DataFrame = PinScope { pins =>
     require(chain.nonEmpty, "need at least one child table")
-    val spark = roots.sparkSession
     var parentDeleted = roots.select(col(rootKey).cast("long").as("k"))
       .filter(col("k").isNotNull).distinct()
     val reports = chain.zipWithIndex.map {
@@ -1074,8 +1073,7 @@ object Validate {
           col(ownKey).cast("long").as("k"))
         val del = keyed.join(parentDeleted.withColumnRenamed("k", "fk"),
           Seq("fk"), "left_semi")
-        parentDeleted = del.select(col("k")).distinct()
-          .localCheckpoint(true)
+        parentDeleted = pins.pin(del.select(col("k")).distinct())
         // kept = total − deleted (no anti-join, no own-key-uniqueness
         // assumption: deletion membership is decided by the FK alone)
         val tAgg = keyed.agg(count(lit(1)).as("n_rows"),
@@ -1171,18 +1169,17 @@ object Validate {
     *
     * @return one row: (n, nx, ny, mi_nano)
     */
-  def mutualInfoNano(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val cells = df.select(col(xCol).cast("string").as("x"),
+  def mutualInfoNano(df: DataFrame, xCol: String, yCol: String): DataFrame = PinScope { pins =>
+    val cells = pins.cache(df.select(col(xCol).cast("string").as("x"),
         col(yCol).cast("string").as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull)
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nxy"))
-      .persist()
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nxy")))
     val mx = cells.groupBy(col("x")).agg(sum(col("nxy")).as("nx"))
     val my = cells.groupBy(col("y")).agg(sum(col("nxy")).as("ny"))
     val tot = cells.agg(sum(col("nxy")).as("n"),
       countDistinct(col("x")).as("nx_vals"),
       countDistinct(col("y")).as("ny_vals"))
-    val out = cells.join(mx, "x").join(my, "y")
+    pins.pin(cells.join(mx, "x").join(my, "y")
       .crossJoin(broadcast(tot))
       .withColumn("term", expr(
         "CAST(FLOOR(1000000000.0 * (CAST(nxy AS DOUBLE) / CAST(n AS DOUBLE))" +
@@ -1191,10 +1188,7 @@ object Validate {
       .groupBy(col("n"), col("nx_vals"), col("ny_vals"))
       .agg(sum(col("term")).as("mi_nano"))
       .select(col("n"), col("nx_vals").as("nx"), col("ny_vals").as("ny"),
-        col("mi_nano"))
-      .localCheckpoint(true)
-    cells.unpersist(blocking = false)
-    out
+        col("mi_nano")))
   }
 
   /** A/B-assignment SAMPLE-RATIO-MISMATCH check — the first gate every

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Graph, Linalg}
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** Unit specs for the link-graph (ops.Graph) and embedding-linalg
   * (ops.Linalg) operators. The e2e DuckDB gates are q171/q171b and
@@ -866,11 +865,6 @@ class GraphLinalgSpec extends SparkSpec {
     * default (these graphs fit; for betweennessSampled, the
     * pivot-parallel path over the broadcast adjacency) and a disabled
     * threshold (-1; the shuffled level loop). */
-  private def onBothPaths(f: => Unit): Unit = {
-    withClue("[default threshold] ")(f)
-    withClue("[threshold -1] ")(withThreshold("-1")(f))
-  }
-
   test("betweennessSampled: bridge node beats higher-degree clique hubs") {
     // two triangles {1,2,3} and {5,6,7} joined by bridge 4:
     //   deg(3) = deg(5) = 3, deg(4) = 2 — yet every one of the 9
@@ -976,13 +970,6 @@ class GraphLinalgSpec extends SparkSpec {
 
   // --- pin hygiene ------------------------------------------------------
 
-  /** Persisted RDDs `f` leaves behind in the session. */
-  private def persistedBy(f: => Any): Set[Int] = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    f
-    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-  }
-
   test("every ported graph and CC op leaves only the pins its result reads") {
     // two triangles sharing edge 2-3, a pendant 5 and a chord 2-4: every
     // op has rounds to run and pins to drop
@@ -1037,13 +1024,7 @@ class GraphLinalgSpec extends SparkSpec {
       "connectedComponentsStar" -> (() =>
         Dedup.connectedComponentsStar(pairs)))
     onBothPaths(ops.foreach { case (name, op) =>
-      var out: org.apache.spark.sql.DataFrame = null
-      val added = persistedBy { out = op() }
-      val reads = out.queryExecution.analyzed
-        .collect { case l: LogicalRDD => l.rdd.id }.toSet
-      assert(added == reads, s"$name: added $added, result reads $reads")
-      // every pin the result reads survived the call
-      assert(out.count() >= 0L, name)
+      assertLeavesOnlyResultPins(name)(op())
     })
   }
 

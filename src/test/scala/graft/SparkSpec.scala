@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one JVM-wide session (getOrCreate),
@@ -18,6 +19,32 @@ trait SparkSpec extends AnyFunSuite {
     val old = spark.conf.get(key)
     spark.conf.set(key, v)
     try f finally spark.conf.set(key, old)
+  }
+
+  /** Runs `f` on the session default and with broadcasting disabled,
+    * the two sides of every `BroadcastGuard`. */
+  def onBothPaths(f: => Unit): Unit = {
+    withClue("[default threshold] ")(f)
+    withClue("[threshold -1] ")(withThreshold("-1")(f))
+  }
+
+  /** Persisted RDDs `f` leaves behind in the session. */
+  def persistedBy(f: => Any): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    f
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+  }
+
+  /** Pin hygiene: `op` must leave persisted exactly the local-checkpoint
+    * pins its result's analyzed plan reads, and those must still be
+    * readable. */
+  def assertLeavesOnlyResultPins(name: String)(op: => DataFrame): Unit = {
+    var out: DataFrame = null
+    val added = persistedBy { out = op }
+    val reads = out.queryExecution.analyzed
+      .collect { case l: LogicalRDD => l.rdd.id }.toSet
+    assert(added == reads, s"$name: added $added, result reads $reads")
+    assert(out.count() >= 0L, name)
   }
 }
 
