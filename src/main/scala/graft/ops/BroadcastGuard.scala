@@ -29,10 +29,16 @@ private[graft] object BroadcastGuard {
   def thresholdBytes(spark: SparkSession): Long =
     castToImpl(spark).sessionState.conf.autoBroadcastJoinThreshold
 
-  /** True when `rows` rows at `rowBytes` each fit the session broadcast
-    * threshold. Strict <, one byte stricter than the planner's own
-    * `canBroadcastBySize` (<=): the estimate here is a guess, so a tie
-    * keeps the shuffled plan. */
+  /** The most rows at `rowBytes` each whose bytes stay strictly under
+    * the session threshold (-1: broadcast off): one byte stricter than
+    * the planner's `canBroadcastBySize` (<=), so a tie of this guessed
+    * estimate keeps the shuffled plan. */
+  def maxRows(spark: SparkSession, rowBytes: Long): Long = {
+    val t = thresholdBytes(spark)
+    if (t > 0L) (t - 1L) / rowBytes else -1L
+  }
+
+  /** True when `rows` rows at `rowBytes` each fit: `rows <= maxRows`. */
   def fits(spark: SparkSession, rows: Long, rowBytes: Long): Boolean =
-    rows * rowBytes < thresholdBytes(spark)
+    rows <= maxRows(spark, rowBytes)
 }

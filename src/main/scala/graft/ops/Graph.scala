@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Link-graph analytics for corpus curation.
   *
@@ -1516,6 +1517,10 @@ object Graph {
       s" + ($h % 65536) * 2654435761) % 4294967296)"
   }
 
+  /** [[knuthMixExpr]] on the driver: a product's low 32 bits depend
+    * only on its operands' low 32 bits, which is all the halves keep. */
+  private[graft] def knuthMix(id: Long): Long = (id * 2654435761L) & 0xFFFFFFFFL
+
   /** Sampled betweenness centrality — Brandes (2001) dependency
     * accumulation from K deterministic pivot sources, truncated at
     * `maxDepth` hops (bounded-distance / κ-betweenness, the standard
@@ -1546,24 +1551,24 @@ object Graph {
     *     2 × 10⁶ × the textbook betweenness (each unordered pair seen
     *     from both endpoints).
     *
-    * 100 TB posture: two paths with one output, picked by the measured
-    * edge count against the session broadcast threshold
-    * ([[BroadcastGuard]], the guard every iterative loop here uses).
+    * 100 TB posture: two paths with one output (same rows and schema),
+    * picked by the distinct edge count against the session broadcast
+    * threshold ([[BroadcastGuard.maxRows]]).
     *   - While |E| fits, the pivots are the queries and the graph is
-    *     the index: the distinct edge list is collected once into a
-    *     CSR adjacency and broadcast, and each task runs a plain
-    *     Brandes pass per pivot over it, resetting only the entries
-    *     that pivot touched (O(|ball|) per pivot, not O(|V|)). The
-    *     whole forward/backward pass is one stage instead of a
-    *     checkpointed join loop per level.
+    *     the index: one collect of at most maxRows + 1 edges (|E| fits
+    *     iff no more come back) builds a broadcast CSR adjacency, the
+    *     driver picks the pivots from its sorted node ids, and each
+    *     task runs a plain Brandes pass per pivot (resetting only what
+    *     that pivot touched: O(|ball|), not O(|V|)) into per-node sums
+    *     the driver merges into a local frame: no cache, pin or join.
     *   - Past the threshold the shuffled level loop runs: per round
     *     (forward and backward) the edge list is touched by ONE
     *     equi-join keyed on the node, frontier rows carry three longs,
     *     and every round is pinned with an eager localCheckpoint (the
     *     kCorePeel lineage-blowup lesson). State is O(K · |ball|) rows
     *     — K bounds the multiplier, exactly the knob the Brandes–Pich
-    *     estimator exposes; nothing is collected but per-round counts.
-    * Both paths feed the same per-node sum/count and node left join.
+    *     estimator exposes; nothing is collected but per-round counts,
+    *     and a pinned per-node sum/count + node left join ends it.
     *
     * @return (node, bc_micro, n_piv) — n_piv = pivots whose truncated
     *         BFS assigned the node a dependency row (0 ≤ n_piv ≤ K);
@@ -1578,19 +1583,17 @@ object Graph {
     val e0 = edges.select(col(src).cast("long").as("esrc"),
         col(dst).cast("long").as("edst"))
       .filter(col("esrc") =!= col("edst"))
-    val e = pins.cache((if (directed) e0
-             else e0.union(e0.select(col("edst").as("esrc"),
-               col("esrc").as("edst"))))
-      .distinct())
-    val nodes = pins.cache(e.select(col("esrc").as("node"))
-      .union(e.select(col("edst").as("node"))).distinct())
-    val piv = nodes.withColumn("hk", expr(knuthMixExpr("node")))
-      .orderBy(col("hk"), col("node")).limit(k)
-      .select(col("node").as("p"))
-    if (BroadcastGuard.fits(edges.sparkSession, e.count(),
-        BroadcastGuard.RowBytesNarrow))
-      betweennessByPivot(pins, e, nodes, piv, maxDepth)
-    else betweennessShuffled(pins, e, nodes, pins.pin(piv), maxDepth)
+    val eAll = (if (directed) e0
+        else e0.union(e0.select(col("edst").as("esrc"),
+          col("esrc").as("edst"))))
+      .distinct()
+    val maxRows = math.min(Int.MaxValue - 9L, // the largest Java array, less 1
+      BroadcastGuard.maxRows(edges.sparkSession, BroadcastGuard.RowBytesNarrow))
+    val pairs = if (maxRows < 0L) Array.empty[(Long, Long)] // off: 0 > maxRows
+      else eAll.limit(maxRows.toInt + 1)
+        .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)).collect()
+    if (pairs.length <= maxRows) betweennessLocal(eAll, pairs, k, maxDepth)
+    else betweennessShuffled(pins, eAll, k, maxDepth)
   }
 
   /** Out-adjacency in CSR form: `ids` are the sorted distinct node ids,
@@ -1629,9 +1632,9 @@ object Graph {
       .divide(java.math.BigInteger.valueOf(sw)).longValueExact()
   }
 
-  /** Per-task state of the pivot-parallel path: |V|-sized arrays
-    * allocated once, with only the entries a pivot touched reset after
-    * it, so each pivot costs O(|ball|). */
+  /** Per-task state of the local path: |V|-sized arrays allocated once,
+    * with only the entries a pivot touched reset after it, so each
+    * pivot costs O(|ball|). */
   private final class BrandesPass(g: Csr, maxDepth: Int) {
     private val dist = Array.fill(g.ids.length)(-1)
     private val sigma = new Array[Long](g.ids.length)
@@ -1639,10 +1642,13 @@ object Graph {
     // the pivot's ball in BFS order; level d is ball(bound(d) until bound(d+1))
     private val ball = new Array[Int](g.ids.length)
     private val bound = new Array[Int](maxDepth + 2)
+    // Σδ and pivot count per node, over every pivot added so far
+    val bc = new Array[Long](g.ids.length)
+    val nPiv = new Array[Long](g.ids.length)
 
-    /** (node, δ_micro) for every node at distance 1..top from pivot
-      * index `p`, the deepest level with δ = 0. */
-    def dependencies(p: Int): Array[(Long, Long)] = {
+    /** Adds δ_micro of pivot index `p` to every node at distance 1..top
+      * from it, the deepest level with δ = 0. */
+    def add(p: Int): Unit = {
       dist(p) = 0; sigma(p) = 1L; ball(0) = p
       bound(0) = 0; bound(1) = 1
       var size = 1
@@ -1685,50 +1691,57 @@ object Graph {
         }
         d -= 1
       }
-      val out = Array.tabulate(size - 1) { i =>
-        val v = ball(i + 1); (g.ids(v), delta(v)) }
       for (i <- 0 until size) {
-        val v = ball(i); dist(v) = -1; sigma(v) = 0L; delta(v) = 0L
+        val v = ball(i)
+        if (i > 0) { bc(v) = Math.addExact(bc(v), delta(v)); nPiv(v) += 1L }
+        dist(v) = -1; sigma(v) = 0L; delta(v) = 0L
       }
-      out
     }
   }
 
-  /** Pivot-parallel [[betweennessSampled]]: `e` fits the broadcast
-    * threshold, so it ships to every task as one CSR and the pivots
-    * split across tasks. */
-  private def betweennessByPivot(pins: PinScope, e: DataFrame,
-      nodes: DataFrame, piv: DataFrame, maxDepth: Int): DataFrame = {
-    val spark = e.sparkSession
-    val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    val pairs = e.as(longPair).collect()
+  /** [[betweennessSampled]] over `pairs`, the whole distinct edge list
+    * of `eAll`: each task sends back the sums of the nodes it touched,
+    * merged on the driver as they arrive. */
+  private def betweennessLocal(eAll: DataFrame, pairs: Array[(Long, Long)],
+      k: Int, maxDepth: Int): DataFrame = {
+    val sc = eAll.sparkSession.sparkContext
     val g = Csr.fromEdges(pairs.map(_._1), pairs.map(_._2))
-    val pivots = piv.collect()
-      .map(r => java.util.Arrays.binarySearch(g.ids, r.getLong(0)))
-    // no pivot means no node: the tail alone gives the empty frame
-    // (a delta stage there would be dropped by AQE's empty-join
-    // propagation and left to serialize after the broadcast died)
-    if (pivots.isEmpty) betweennessTail(pins, nodes, None)
-    else {
-      val sc = spark.sparkContext
-      val bc = sc.broadcast(g)
-      val deltas = sc.parallelize(pivots.toSeq,
-          math.min(pivots.length, sc.defaultParallelism))
-        .mapPartitions { it =>
-          val pass = new BrandesPass(bc.value, maxDepth)
-          it.flatMap(pass.dependencies)
-        }
-      val out = betweennessTail(pins, nodes,
-        Some(spark.createDataset(deltas)(longPair).toDF("v", "delta")))
-      bc.destroy()
-      out
+    val bc = new Array[Long](g.ids.length)
+    val nPiv = new Array[Long](g.ids.length)
+    val pivots = g.ids.indices.sortBy(i => (knuthMix(g.ids(i)), g.ids(i)))
+      .take(k)
+    if (pivots.nonEmpty) {
+      val csr = sc.broadcast(g)
+      try sc.runJob(sc.parallelize(pivots,
+          math.min(pivots.length, sc.defaultParallelism)),
+        (it: Iterator[Int]) => {
+          val pass = new BrandesPass(csr.value, maxDepth)
+          it.foreach(pass.add)
+          pass.nPiv.indices.filter(pass.nPiv(_) > 0L)
+            .map(v => (v, pass.bc(v), pass.nPiv(v)))
+        },
+        (_: Int, sums: Seq[(Int, Long, Long)]) => for ((v, b, n) <- sums) {
+          bc(v) = Math.addExact(bc(v), b); nPiv(v) += n })
+      finally csr.destroy()
     }
+    // node is nullable as the shuffled path's union of both edge ends is
+    val schema = new StructType()
+      .add("node", LongType, eAll.schema.exists(_.nullable))
+      .add("bc_micro", LongType, false).add("n_piv", LongType, false)
+    eAll.sparkSession.createDataFrame(java.util.Arrays.asList(
+      g.ids.indices.map(i => Row(g.ids(i), bc(i), nPiv(i))): _*), schema)
   }
 
   /** Level-synchronous [[betweennessSampled]] over the shuffled edge
     * list — the path past the broadcast threshold. */
-  private def betweennessShuffled(pins: PinScope, e: DataFrame,
-      nodes: DataFrame, piv: DataFrame, maxDepth: Int): DataFrame = {
+  private def betweennessShuffled(pins: PinScope, eAll: DataFrame, k: Int,
+      maxDepth: Int): DataFrame = {
+    val e = pins.cache(eAll)
+    val nodes = pins.cache(e.select(col("esrc").as("node"))
+      .union(e.select(col("edst").as("node"))).distinct())
+    val piv = pins.pin(nodes.withColumn("hk", expr(knuthMixExpr("node")))
+      .orderBy(col("hk"), col("node")).limit(k)
+      .select(col("node").as("p")))
     // ---- forward: levels(d) = (p, v, sigma) at exact distance d ----
     val levels = scala.collection.mutable.ArrayBuffer(
       pins.pin(piv.select(col("p"), col("p").as("v"), lit(1L).as("sigma"))))
@@ -1750,12 +1763,12 @@ object Graph {
     }
     // ---- backward: deepest level's delta is 0 (truncation bound) ----
     // (depthTop == 0 — pivots with no out-edges — leaves no delta
-    // part: the tail then gives every node bc 0 and n_piv 0)
+    // row: every node then gets bc 0 and n_piv 0)
     val depthTop = levels.size - 1
     var below = levels(depthTop)
       .select(col("p"), col("v"), lit(0L).as("delta"))
-    val deltaParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (depthTop >= 1) deltaParts += below
+    val deltaParts = scala.collection.mutable.ArrayBuffer(
+      below.filter(lit(depthTop >= 1)))
     var i = depthTop - 1
     while (i >= 1) {
       val lvl = levels(i)
@@ -1777,20 +1790,11 @@ object Graph {
       below = deltaI
       i -= 1
     }
-    betweennessTail(pins, nodes, deltaParts.reduceOption(_ unionByName _))
+    // every graph node kept (bc 0, n_piv 0 when no pivot reached it)
+    val touched = deltaParts.reduce(_ unionByName _)
+      .groupBy(col("v").as("node"))
+      .agg(sum(col("delta")).as("bc_micro"), count(lit(1)).as("n_piv"))
+    pins.pin(nodes.join(touched, Seq("node"), "left")
+      .na.fill(0L, Seq("bc_micro", "n_piv")))
   }
-
-  /** Shared tail of both [[betweennessSampled]] paths: per-node sum and
-    * pivot count of the (v, delta) rows, every graph node kept (bc 0,
-    * n_piv 0 when no pivot reached it), pinned. */
-  private def betweennessTail(pins: PinScope, nodes: DataFrame,
-      deltas: Option[DataFrame]): DataFrame = pins.pin(deltas match {
-    case None =>
-      nodes.select(col("node"), lit(0L).as("bc_micro"), lit(0L).as("n_piv"))
-    case Some(rows) =>
-      val touched = rows.groupBy(col("v").as("node"))
-        .agg(sum(col("delta")).as("bc_micro"), count(lit(1)).as("n_piv"))
-      nodes.join(touched, Seq("node"), "left")
-        .na.fill(0L, Seq("bc_micro", "n_piv"))
-  })
 }

@@ -1073,7 +1073,8 @@ object Validate {
           col(ownKey).cast("long").as("k"))
         val del = keyed.join(parentDeleted.withColumnRenamed("k", "fk"),
           Seq("fk"), "left_semi")
-        parentDeleted = pins.pin(del.select(col("k")).distinct())
+        if (i < chain.size - 1) // only the next level reads these keys
+          parentDeleted = pins.pin(del.select(col("k")).distinct())
         // kept = total − deleted (no anti-join, no own-key-uniqueness
         // assumption: deletion membership is decided by the FK alone)
         val tAgg = keyed.agg(count(lit(1)).as("n_rows"),

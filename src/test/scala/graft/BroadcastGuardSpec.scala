@@ -18,6 +18,27 @@ class BroadcastGuardSpec extends SparkSpec {
     }
   }
 
+  test("fits is rows <= maxRows on both sides of the boundary") {
+    def boundary(): Unit =
+      for (w <- Seq(BroadcastGuard.RowBytesNarrow, BroadcastGuard.RowBytesLabeled)) {
+        val m = BroadcastGuard.maxRows(spark, w)
+        for (r <- Seq(m - 1L, m, m + 1L))
+          assert(BroadcastGuard.fits(spark, r, w) === (r <= m), s"rows $r at $w B")
+      }
+    withThreshold((1L << 20).toString) {
+      boundary()
+      // the largest count whose bytes stay strictly under the threshold
+      assert(BroadcastGuard.maxRows(spark, BroadcastGuard.RowBytesNarrow) === 16383L)
+      assert(BroadcastGuard.maxRows(spark, BroadcastGuard.RowBytesLabeled) ===
+        ((1L << 20) - 1L) / 96L)
+    }
+    withThreshold("-1") {
+      boundary()
+      assert(BroadcastGuard.maxRows(spark, BroadcastGuard.RowBytesNarrow) === -1L)
+      assert(!BroadcastGuard.fits(spark, 0L, BroadcastGuard.RowBytesLabeled))
+    }
+  }
+
   test("unit-suffixed thresholds no longer throw (the r17 ADVICE bug)") {
     withThreshold("10MB") {
       assert(BroadcastGuard.thresholdBytes(spark) === 10L * 1024 * 1024)

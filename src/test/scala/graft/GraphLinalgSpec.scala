@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Graph, Linalg}
+import graft.ops.{BroadcastGuard, Dedup, Graph, Linalg}
 
 /** Unit specs for the link-graph (ops.Graph) and embedding-linalg
   * (ops.Linalg) operators. The e2e DuckDB gates are q171/q171b and
@@ -966,6 +966,36 @@ class GraphLinalgSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
       assert(out == (1L to 8L).map(_ -> ((0L, 0L))).toMap, out)
     }
+  }
+
+  test("betweennessSampled: the fitting edge list gives a local frame, one more row the pinned shuffled result") {
+    // a 6-node path with a nullable dst, undirected: |E| = 10 distinct
+    // directed edges after symmetrizing
+    val edges = Seq[(Long, java.lang.Long)]((1L, 2L), (2L, 3L), (3L, 4L),
+      (4L, 5L), (5L, 6L)).toDF("src", "dst")
+    val nE = 10L
+    def run(rows: Long) = {
+      // the smallest threshold whose maxRows is `rows`
+      withThreshold((rows * BroadcastGuard.RowBytesNarrow + 1L).toString) {
+        assert(BroadcastGuard.maxRows(spark, BroadcastGuard.RowBytesNarrow) == rows)
+        val out = Graph.betweennessSampled(edges, "src", "dst", k = 4,
+          maxDepth = 3)
+        (out, out.collect().toSet)
+      }
+    }
+    val (local, localRows) = run(nE)
+    val (shuffled, shuffledRows) = run(nE - 1L)
+    assert(local.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      local.queryExecution.analyzed.treeString)
+    val pin = graft.ops.PinScope.checkpointRdd(shuffled)
+    assert(pin.exists(r => spark.sparkContext.getPersistentRDDs.contains(r.id)),
+      shuffled.queryExecution.analyzed.treeString)
+    assert(localRows == shuffledRows)
+    assert(localRows.size == 6)
+    assert(local.schema == shuffled.schema)
+    assert(local.schema("node").nullable)
+    pin.foreach(_.unpersist())
   }
 
   // --- pin hygiene ------------------------------------------------------

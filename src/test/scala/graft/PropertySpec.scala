@@ -596,6 +596,23 @@ class PropertySpec extends SparkSpec {
     (0 until n).map(v => v.toLong -> want(v) * 1000000L).toMap
   }
 
+  test("knuthMix on the driver equals knuthMixExpr evaluated by Spark") {
+    // random longs plus the edges of the 2^32 reduction and the BIGINT
+    // range, all checked in one Spark job (an RDD source, so the
+    // expression runs in tasks as in the shuffled path, not folded
+    // into a local relation on the driver)
+    val rnd = new scala.util.Random(291)
+    val ids = Seq(0L, 1L, -1L, 1L << 32, -(1L << 32), Long.MinValue,
+      Long.MaxValue) ++ Seq.fill(500)(rnd.nextLong())
+    val got = spark.sparkContext.parallelize(ids, 2).toDF("id")
+      .select(col("id"), expr(graft.ops.Graph.knuthMixExpr("id")))
+      .as[(Long, Long)].collect()
+    assert(got.length == ids.length)
+    got.foreach { case (id, h) =>
+      assert(graft.ops.Graph.knuthMix(id) == h, s"id $id")
+    }
+  }
+
   test("betweennessSampled: broadcast-adjacency path equals the shuffled path; trees match brute force") {
     // one property over two input families, each case run twice: on
     // the session default (these graphs fit the broadcast guard, so
